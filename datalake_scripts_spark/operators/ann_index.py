@@ -64,6 +64,7 @@ from .versioned import (
     CommitConflict,
     _expand_manifest,
     _load_manifest,
+    _manifest_partition_spec,
     _mapping_enabled,
     current_version,
     read_changes,
@@ -127,16 +128,20 @@ def load_centroids(
     serve (r13, guide §5: the job was pure scheduling overhead). Any
     table feature the fast path can't honor falls back to the full
     versioned read."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
     cdir = _subdir(index_dir, _CENTROIDS)
     try:
         v = version if version is not None else current_version(cdir)
         manifest = _load_manifest(cdir, v)
-        if not manifest.get("dvs") and not _mapping_enabled(
-            manifest.get("schema")
+        # a partition column lives in the path, not in the file
+        if not (
+            manifest.get("dvs")
+            or _manifest_partition_spec(manifest)
+            or _mapping_enabled(manifest.get("schema"))
         ):
             files, _stats = _expand_manifest(cdir, manifest)
-            import pyarrow.parquet as pq
-
             out: list[tuple[int, list[float]]] = []
             for f in files:
                 tbl = pq.read_table(
@@ -149,7 +154,7 @@ def load_centroids(
                     for c, vec in zip(cids, vecs)
                 )
             return sorted(out)
-    except (FileNotFoundError, KeyError):
+    except (OSError, KeyError, pa.ArrowInvalid):
         pass  # unexpected layout: take the versioned-reader path
     rows = read_versioned(
         spark, _subdir(index_dir, _CENTROIDS), version=version

@@ -734,104 +734,86 @@ def duplicate_clusters_star(pairs: DataFrame, max_iters: int = 25) -> DataFrame:
     (Kiveris et al., "Connected Components in MapReduce and Beyond") —
     the at-scale alternative to :func:`duplicate_clusters`.
 
-    Each round rewires edges toward per-neighborhood minima:
+    Each round rewires edges, oriented u > v, toward per-neighborhood
+    minima, both computed as ``min(v) OVER (PARTITION BY u)`` (no
+    groupBy + join-back, and no dedup before a minimum, which
+    duplicates cannot change):
 
     - large-star: per node u over its full (symmetric) neighborhood,
       m = min(N(u) + {u}); every LARGER neighbor v > u re-attaches as
       (v, m).
-    - small-star: per node u over its SMALLER neighbors (edges oriented
-      max->min), m = min; every smaller neighbor and u itself attach to
-      m.
+    - small-star: per node u over its SMALLER neighbors, m = min; every
+      smaller neighbor and u itself attach to m.
 
-    The edge set monotonically contracts into a star forest rooted at
-    each component's minimum id in O(log n) rounds, and — unlike label
-    propagation — the per-round state is the EDGE set itself: no
-    label table joined against an ever-reused edge relation, so the
-    heaviest shuffle shrinks every round as stars collapse. Convergence
-    is detected via an order-insensitive (count, xor-of-hashes)
-    signature of the edge set — a collision (~2^-64 per round) could
-    end the loop one round early with an uncontracted forest; if that
-    risk matters, compare with exceptAll instead. Returns
-    (doc_id, cluster_id), identical to
-    :func:`duplicate_clusters` (equivalence is tested on chains,
-    cliques, forests, and random graphs).
+    The edge set contracts into a star forest rooted at each
+    component's minimum id in O(log n) rounds, and the per-round state
+    is the edge set itself, kept as one row per node with its distinct
+    parents (the round's third and last shuffle). The stop test is
+    exact and rides on that materialization as an observed metric, so
+    it costs no job of its own: the edges form a star forest rooted at
+    each component's minimum exactly when every node has exactly one
+    role, one parent (a leaf) or children only (a root). Such a forest
+    is a fixpoint of a round, so the loop stops in the round that
+    produces it. Note that "no node is both a parent and a child" alone
+    is not enough: the chain 1-3-4-5-2 leaves one round as
+    {3->1, 4->1, 3->2, 5->2}, where 3 has two parents.
+
+    Returns (doc_id, cluster_id), identical to :func:`duplicate_clusters`
+    (equivalence is tested on chains, cliques, forests, and random
+    graphs against a union-find). Raises if ``max_iters`` rounds end
+    without a star forest.
     """
-    # normalize orientation to max->min once: afterwards no round can
-    # produce both (a,b) and (b,a), so the symmetric view below needs
-    # no dedup of its own
-    edges = (
-        pairs.select(
-            F.greatest("id_a", "id_b").alias("u"),
-            F.least("id_a", "id_b").alias("v"),
-        )
-        .filter(F.col("u") != F.col("v"))
-        .distinct()
-        .localCheckpoint()
+    from pyspark.sql import Observation, Window
+
+    by_u = Window.partitionBy("u")
+    # self-loops and duplicate pairs need no filter: a self-loop emits
+    # nothing in large-star, duplicates change no minimum
+    edges = pairs.select(
+        F.greatest("id_a", "id_b").alias("u"), F.least("id_a", "id_b").alias("v")
     )
-
-    def _signature(e: DataFrame) -> tuple[int, int]:
-        row = e.agg(
-            F.count(F.lit(1)).alias("n"),
-            # bit_xor: order-insensitive and overflow-free (ANSI mode
-            # rejects a plain SUM of 64-bit hashes)
-            F.coalesce(F.bit_xor(F.xxhash64("u", "v")), F.lit(0)).alias("h"),
-        ).first()
-        return (int(row.n), int(row.h))
-
-    sig = _signature(edges)
-    converged = False
+    id_type = edges.schema["v"].dataType
     for _ in range(max_iters):
-        # large-star over the symmetric neighborhood (edges are oriented
-        # max->min and distinct, so the two union branches are disjoint
-        # — no dedup needed here)
-        sym = edges.unionByName(
-            edges.select(F.col("v").alias("u"), F.col("u").alias("v"))
-        )
-        mins = (
-            sym.groupBy("u")
-            .agg(F.min("v").alias("_mnv"))
-            .select("u", F.least("u", "_mnv").alias("m"))
-        )
-        # duplicates among (v, m) collapse in dir_'s distinct below
+        sym = edges.select(F.explode(F.array(
+            F.struct("u", "v"),
+            F.struct(F.col("v").alias("u"), F.col("u").alias("v")),
+        )).alias("e")).select("e.*")
+        # large-star: emits (v, m) with v > u >= m, already oriented
         ls = (
-            sym.join(mins, "u")
+            sym.select("u", "v", F.least("u", F.min("v").over(by_u)).alias("m"))
             .filter(F.col("v") > F.col("u"))
             .select(F.col("v").alias("u"), F.col("m").alias("v"))
-            .filter(F.col("u") != F.col("v"))
         )
-        # small-star over max->min oriented edges
-        dir_ = ls.select(
-            F.greatest("u", "v").alias("u"), F.least("u", "v").alias("v")
-        ).distinct()
-        mins2 = dir_.groupBy("u").agg(F.min("v").alias("m"))
-        ss_leaves = (
-            dir_.join(mins2, "u")
-            .select(F.col("v").alias("u"), F.col("m").alias("v"))
-        )
-        ss_self = mins2.select(F.col("u"), F.col("m").alias("v"))
-        edges_new = (
-            ss_leaves.unionByName(ss_self)
-            .filter(F.col("u") != F.col("v"))
-            .distinct()
+        # small-star: u and each of its smaller neighbors attach to m
+        ss = ls.select(
+            F.explode(F.array("u", "v")).alias("u"), F.min("v").over(by_u).alias("v")
+        ).filter(F.col("u") != F.col("v"))
+        # one row per node: its distinct parents, and whether it has a child
+        roles = ss.select(F.explode(F.array(
+            F.struct(F.col("u").alias("n"), F.col("v").alias("p")),
+            F.struct(F.col("v").alias("n"), F.lit(None).cast(id_type).alias("p")),
+        )).alias("r")).select("r.*")
+        star = Observation()
+        # localCheckpoint (not persist) keeps every round's plan constant
+        # in size; the observation is filled by that same job
+        nodes = (
+            roles.groupBy("n")
+            .agg(
+                F.collect_set("p").alias("parents"),
+                F.max(F.col("p").isNull().cast("int")).alias("has_child"),
+            )
+            .observe(star, F.max(F.size("parents") + F.col("has_child")).alias("roles"))
             .localCheckpoint()
         )
-        new_sig = _signature(edges_new)
-        edges = edges_new
-        if new_sig == sig:
-            converged = True
-            break
-        sig = new_sig
-    if not converged:
-        raise RuntimeError(
-            f"duplicate_clusters_star did not converge in {max_iters} rounds "
-            "(expected ~log2(n)); raise max_iters"
-        )
-    # fixpoint edge set is a star forest oriented leaf(u) -> root(v)
-    roots = edges.select(F.col("v").alias("doc_id")).distinct().select(
-        "doc_id", F.col("doc_id").alias("cluster_id")
+        if star.get["roles"] in (None, 1):
+            return nodes.select(
+                F.col("n").alias("doc_id"),
+                F.coalesce(F.get("parents", 0), F.col("n")).alias("cluster_id"),
+            )
+        edges = nodes.select(F.col("n").alias("u"), F.explode("parents").alias("v"))
+    raise RuntimeError(
+        f"duplicate_clusters_star did not converge in {max_iters} rounds "
+        "(expected ~log2(n)); raise max_iters"
     )
-    leaves = edges.select(F.col("u").alias("doc_id"), F.col("v").alias("cluster_id"))
-    return leaves.unionByName(roots)
 
 
 def semantic_dedup(

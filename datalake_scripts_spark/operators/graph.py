@@ -1,7 +1,8 @@
 """Iterative graph algorithms over edge-list DataFrames.
 
-The engine already has connected components (operators/dedup.py:513
-pointer-jump, :592 large-star/small-star) for dedup clustering. This
+The engine already has connected components for dedup clustering
+(``dedup.duplicate_clusters``, pointer-jump label propagation, and
+``dedup.duplicate_clusters_star``, large-star/small-star). This
 module adds **PageRank** — the other canonical iterative graph
 computation a training-data pipeline needs (web-graph-style quality
 priors for corpus weighting; see PAPERS.md on quality scoring).
@@ -23,7 +24,7 @@ Design for scale + cross-engine exactness:
 - Iterations are unrolled into one lazy plan (no driver sync per
   round): for the small fixed iteration counts of rank-prior jobs this
   beats a loop with actions; for open-ended convergence runs, reuse the
-  checkpoint-per-round pattern of dedup.connected_components_star.
+  checkpoint-per-round pattern of dedup.duplicate_clusters_star.
 """
 
 from __future__ import annotations
@@ -204,7 +205,7 @@ def bfs_hops(
     list on the source key) plus an anti-join against the visited set,
     so round h touches only the h-th frontier, never the whole graph.
     Each round's frontier is localCheckpoint()-ed (same contract as
-    dedup.connected_components: constant-size plans, no Catalyst
+    dedup.duplicate_clusters: constant-size plans, no Catalyst
     re-analysis of the join history); visited stays a lazy union of
     those checkpointed frontiers — its leaves are materialized, so
     nothing recomputes, and the whole visited set is never re-written
@@ -260,8 +261,9 @@ def kcore_rounds(
     see PAPERS.md on graph-based corpus curation). The fixed ``rounds``
     unroll keeps the computation deterministic and oracle-replicable
     (the BFS/PageRank convention); production convergence runs reuse the
-    checkpoint-per-round loop of dedup.connected_components_star with an
-    isEmpty() early-exit, which this loop also takes once the core is
+    checkpoint-per-round loop of dedup.duplicate_clusters_star, which
+    stops in the round that passes its exact stop test. This loop takes
+    an isEmpty() early exit once the core is
     empty or stable-sized (the census rows for the remaining fixed
     rounds are then computed from the stabilized edge set — identical
     output, no wasted shuffles).

@@ -26,34 +26,45 @@ from __future__ import annotations
 
 from dataclasses import dataclass, field
 
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 
+def quote_ident(name: str) -> str:
+    """Backtick-quote one identifier for a SQL expression string.
+
+    Projections here go to the JVM as SQL strings in one ``selectExpr``
+    rather than as one ``F.col(...).alias(...)`` per column: PySpark
+    wraps every Column-building call in call-site capture, about ten
+    Py4J round trips each, which dominated wide plan builds."""
+    return "`" + name.replace("`", "``") + "`"
+
+
+def _sql_ref(col: str) -> str:
+    """A column reference as ``F.col`` reads it (dots separate struct
+    fields; a name already holding backticks is taken as written)."""
+    return col if "`" in col else ".".join(map(quote_ident, col.split(".")))
+
+
 def _flatten_cols(
     schema: T.StructType,
-    parent_path: str,
+    parent_path: tuple[str, ...],
     parent_name: str,
     sep: str,
     max_depth: int | None,
     depth: int,
-    explode_arrays: bool,
-) -> list[tuple[str, str]]:
-    """Walk a StructType, returning (dotted_path, output_name) leaves."""
-    out: list[tuple[str, str]] = []
+) -> list[tuple[tuple[str, ...], str]]:
+    """Walk a StructType, returning (field path, output_name) leaves."""
+    out: list[tuple[tuple[str, ...], str]] = []
     for f in schema.fields:
-        path = f"{parent_path}.{f.name}" if parent_path else f.name
+        path = (*parent_path, f.name)
         name = f"{parent_name}{sep}{f.name}" if parent_name else f.name
         recurse = isinstance(f.dataType, T.StructType) and (
             max_depth is None or depth < max_depth
         )
         if recurse:
-            out.extend(
-                _flatten_cols(
-                    f.dataType, path, name, sep, max_depth, depth + 1, explode_arrays
-                )
-            )
+            out.extend(_flatten_cols(f.dataType, path, name, sep, max_depth, depth + 1))
         else:
             out.append((path, name))
     return out
@@ -75,20 +86,20 @@ def flatten(
     as-is — explode is a separate, row-multiplying decision
     (:func:`explode_into`).
 
-    Single ``select`` -> single Project node; Catalyst prunes unused
+    Single ``selectExpr`` -> single Project node; Catalyst prunes unused
     leaves all the way into the parquet reader.
     """
-    leaves = _flatten_cols(df.schema, "", prefix, sep, max_depth, 0, False)
+    leaves = _flatten_cols(df.schema, (), prefix, sep, max_depth, 0)
     seen: dict[str, int] = {}
-    cols: list[Column] = []
+    exprs: list[str] = []
     for path, name in leaves:
         if name in seen:  # only possible when sep collides with a field name
             seen[name] += 1
             name = f"{name}{sep}{seen[name]}"
         else:
             seen[name] = 0
-        cols.append(F.col(f"`{'`.`'.join(path.split('.'))}`").alias(name))
-    return df.select(*cols)
+        exprs.append(f"{'.'.join(map(quote_ident, path))} AS {quote_ident(name)}")
+    return df.selectExpr(*exprs)
 
 
 def explode_into(
@@ -108,9 +119,11 @@ def explode_into(
     (FIXTURES.md B3 edge case).
     """
     alias = alias or array_col.split(".")[-1]
-    exploder = F.explode_outer if outer else F.explode
-    carry_cols = [F.col(c) for c in (carry or [])]
-    return df.select(*carry_cols, exploder(F.col(array_col)).alias(alias))
+    exploder = "explode_outer" if outer else "explode"
+    return df.selectExpr(
+        *map(_sql_ref, carry or []),
+        f"{exploder}({_sql_ref(array_col)}) AS {quote_ident(alias)}",
+    )
 
 
 @dataclass

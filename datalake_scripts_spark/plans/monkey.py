@@ -22,7 +22,7 @@ from pyspark.sql import functions as F
 
 from ..functions.casts import to_ts_iso
 from ..io import read_json
-from ..operators.nested import explode_into, flatten
+from ..operators.nested import explode_into, flatten, quote_ident
 from . import schemas
 
 
@@ -42,11 +42,11 @@ def monkey_survey_tables(spark: SparkSession, details_path: str) -> dict[str, Da
     sdf = _surveys_preproc(spark, details_path).persist()
     out: dict[str, DataFrame] = {}
 
-    out["hst_surveys"] = sdf.select(
+    out["hst_surveys"] = sdf.selectExpr(*map(quote_ident, [
         "load_datetime", "survey_id", "date_created", "date_modified",
         "folder_id", "language", "page_count", "question_count",
         "response_count", "title",
-    )
+    ]))
 
     pages = explode_into(
         sdf, "pages", carry=["survey_id", "load_datetime"], alias="pages"
@@ -78,12 +78,12 @@ def monkey_survey_tables(spark: SparkSession, details_path: str) -> dict[str, Da
         alias="choices",
     )
     choices = flatten(choices)  # full depth: choices_quiz_options_score
-    out["hst_surveys_choices"] = choices.select(
+    out["hst_surveys_choices"] = choices.selectExpr(*map(quote_ident, [
         "load_datetime", "survey_id", "pages_id", "qs_id", "qs_position",
         "choices_id", "choices_is_na", "choices_position",
         "choices_quiz_options_score", "choices_text", "choices_visible",
         "choices_weight",
-    )
+    ]))
     return out
 
 
@@ -130,15 +130,15 @@ def monkey_response_tables(spark: SparkSession, responses_path: str) -> dict[str
         alias="questions_answers",
     )
     answers = flatten(answers)
-    out["hst_surveys_answers"] = answers.select(
-        "load_datetime", "response_id", "response_survey_id",
-        "response_recipient_id", "pages_id", "questions_id",
-        "questions_answers_choice_id", "questions_answers_row_id",
-        "questions_answers_text",
+    out["hst_surveys_answers"] = answers.selectExpr(
+        *map(quote_ident, [
+            "load_datetime", "response_id", "response_survey_id",
+            "response_recipient_id", "pages_id", "questions_id",
+            "questions_answers_choice_id", "questions_answers_row_id",
+            "questions_answers_text",
+        ]),
         # reference contract name (reversed prefix stack, monkey_proc.py:475)
-        F.col("questions_answers_choices_weight").alias(
-            "choices_questions_answers_weight"
-        ),
+        "questions_answers_choices_weight AS choices_questions_answers_weight",
     )
     return out
 

@@ -28,7 +28,7 @@ from pyspark.sql import functions as F
 
 from ..functions.casts import to_ts_epoch_seconds
 from ..io import read_json
-from ..operators.nested import explode_into, flatten
+from ..operators.nested import explode_into, flatten, quote_ident
 from . import schemas
 
 MEMBERS_COLS = [
@@ -57,12 +57,12 @@ def vk_group_tables(spark: SparkSession, groups_path: str) -> dict[str, DataFram
         .persist()
     )
     out = {
-        "hst_groups": sdf.select(
+        "hst_groups": sdf.selectExpr(*map(quote_ident, [
             "load_datetime", "group_id", "type", "name", "screen_name",
             "activity", "description", "is_closed", "members_count", "status",
             "verified", "site", "wiki_page", "city_id", "city_title",
             "country_id", "country_title",
-        )
+        ]))
     }
     contacts = flatten(
         explode_into(sdf, "contacts", carry=["group_id", "load_datetime"], alias="contacts")
@@ -91,7 +91,7 @@ def vk_member_tables(
         .withColumn("last_seen_time", to_ts_epoch_seconds("last_seen_time"))
         .persist()
     )
-    out = {"hst_members": sdf.select(*MEMBERS_COLS)}
+    out = {"hst_members": sdf.selectExpr(*map(quote_ident, MEMBERS_COLS))}
     for table, array_col, prefix, cols in [
         (
             "hst_members_career", "career", "career_",
@@ -113,9 +113,8 @@ def vk_member_tables(
                 sdf, array_col, carry=["member_id", "load_datetime"], alias=array_col
             )
         )
-        out[table] = child.select(
-            "load_datetime", "member_id",
-            *[F.col(f"{prefix}{c}") for c in cols],
+        out[table] = child.selectExpr(
+            "load_datetime", "member_id", *[quote_ident(prefix + c) for c in cols]
         )
     return out
 

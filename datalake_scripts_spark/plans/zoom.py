@@ -18,7 +18,7 @@ from pyspark.sql import functions as F
 
 from ..functions.casts import array_to_csv, to_ts_iso_z
 from ..io import read_json
-from ..operators.nested import explode_into, flatten
+from ..operators.nested import explode_into, flatten, quote_ident
 from . import schemas
 
 MEETINGS_COLS = [
@@ -76,7 +76,7 @@ def zoom_tables(
         # meetings and records share one lineage; persist before fan-out
         # (the reference recomputes the scan per sink — SURVEY.md §4)
         flat = flat.persist()
-        out["meetings"] = flat.select(*MEETINGS_COLS)
+        out["meetings"] = flat.selectExpr(*map(quote_ident, MEETINGS_COLS))
         rec = explode_into(
             flat, "meet_recording_files", carry=["meet_uuid", "meet_id"], alias="rec"
         )
@@ -84,16 +84,17 @@ def zoom_tables(
         rec = rec.withColumn(
             "rec_recording_start", to_ts_iso_z("rec_recording_start")
         ).withColumn("rec_recording_end", to_ts_iso_z("rec_recording_end"))
-        out["records"] = rec.select(*RECORDS_COLS)
+        out["records"] = rec.selectExpr(*map(quote_ident, RECORDS_COLS))
 
     praw = read_json(spark, participants_path, schema=schemas.ZOOM_PARTICIPANTS)
     pts = explode_into(
         praw, "participants_data.participants", carry=["uuid"], alias="p"
     )
-    pts = flatten(pts.select(F.col("uuid").alias("meeting_uuid"), "p"), prefix="")
+    pts = flatten(pts.selectExpr("uuid AS meeting_uuid", "p"), prefix="")
     # flatten gives p_<field>; strip to the DDL names
-    pts = pts.select(
-        "meeting_uuid", *[F.col(f"p_{f}").alias(f) for f in PARTICIPANT_FIELDS]
+    pts = pts.selectExpr(
+        "meeting_uuid",
+        *[f"{quote_ident('p_' + f)} AS {quote_ident(f)}" for f in PARTICIPANT_FIELDS],
     )
     pts = (
         pts.withColumn("join_time", to_ts_iso_z("join_time"))

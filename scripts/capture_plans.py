@@ -14,7 +14,7 @@ ExistingRDD`` in the returned frame's explain (the r12 triangle
 the pre-checkpoint frames are where changes like a join-condition
 rewrite are actually visible.
 
-tests/test_plans.py lints that committed *_before/*_after pairs
+tests/test_plan_evidence.py lints that committed *_before/*_after pairs
 claimed as evidence actually differ.
 """
 

@@ -201,3 +201,45 @@ def test_cli_ann_build_and_refresh(spark, corpus_dir, tmp_path, capsys):
     assert "assigned: n_new=20" in capsys.readouterr().out
     got = AI.ivf_topk_indexed(spark, batch.limit(1), idx, k=3, nprobe=2)
     assert got.count() == 3
+
+
+def test_centroids_fall_back_when_fast_path_cannot_read(
+    spark, corpus_dir, tmp_path, monkeypatch
+):
+    """load_centroids reads the centroid files with pyarrow, but only
+    when it can: a partitioned centroids table (the partition column
+    lives in the path, not in the file) and a file pyarrow rejects both
+    take the versioned read, and the serve answers as before."""
+    import shutil
+
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    idx = str(tmp_path / "idx")
+    AI.build_ann_index(spark, corpus_dir, idx, centroids="stride",
+                       assignment="literal")
+    cents = AI.load_centroids(spark, idx)
+    q = V.read_versioned(spark, corpus_dir).filter(F.col("vec_id") < 10)
+    want = _rows(AI.ivf_topk_indexed(spark, q, idx, k=3, nprobe=2))
+
+    # same centroids, same version number, partitioned by cid
+    part = str(tmp_path / "idx_partitioned")
+    shutil.copytree(idx, part)
+    cdir = AI._subdir(part, AI._CENTROIDS)
+    shutil.rmtree(cdir)
+    V.write_versioned(
+        spark, spark.createDataFrame(cents, "cid bigint, cvec array<double>"),
+        cdir, mode="overwrite", partition_by=["cid"],
+    )
+    assert V.current_version(cdir) == V.current_version(
+        AI._subdir(idx, AI._CENTROIDS)
+    )
+    assert AI.load_centroids(spark, part) == cents
+    assert _rows(AI.ivf_topk_indexed(spark, q, part, k=3, nprobe=2)) == want
+
+    def unreadable(*_a, **_k):
+        raise pa.ArrowInvalid("unreadable footer")
+
+    monkeypatch.setattr(pq, "read_table", unreadable)
+    assert AI.load_centroids(spark, idx) == cents
+    assert _rows(AI.ivf_topk_indexed(spark, q, idx, k=3, nprobe=2)) == want

@@ -185,6 +185,74 @@ def test_star_cc_random_graph_matches(spark):
     )
 
 
+def _union_find(pairs):
+    """Reference components: {node: component minimum}; self-loops add
+    no node (the operator drops them too)."""
+    parent = {}
+
+    def find(x):
+        parent.setdefault(x, x)
+        while parent[x] != x:
+            parent[x] = parent[parent[x]]
+            x = parent[x]
+        return x
+
+    for a, b in pairs:
+        if a != b:
+            ra, rb = find(a), find(b)
+            parent[max(ra, rb)] = min(ra, rb)
+    return {x: find(x) for x in parent}
+
+
+def _random_graph(seed, nodes, edges):
+    import random
+
+    rng = random.Random(seed)
+    return [(rng.randint(1, nodes), rng.randint(1, nodes)) for _ in range(edges)]
+
+
+@pytest.mark.parametrize(
+    "pairs",
+    [
+        [],
+        [(1, 1), (2, 2)],  # self-loops only
+        [(1, k) for k in range(2, 9)] + [(20, 21), (20, 22)],  # already stars
+        [(1, 2), (2, 1), (1, 2), (3, 2), (5, 5), (7, 6), (6, 7)],  # dups, reversed
+        [(i, i + 1) for i in range(1, 200)],  # long chain
+        [(a, b) for base in (1, 50, 90) for a in range(base, base + 6)
+         for b in range(a + 1, base + 6)],  # disjoint cliques
+        # one round leaves {3->1, 4->1, 3->2, 5->2}: no node is both a
+        # parent and a child, yet 3 has two parents and 5 is not under 1
+        [(1, 3), (2, 5), (3, 4), (4, 5)],
+    ]
+    + [_random_graph(seed, n, m) for seed, (n, m) in
+       enumerate([(10, 20), (30, 25), (60, 80), (200, 150), (400, 600)])],
+)
+def test_star_cc_matches_union_find(spark, pairs):
+    df = spark.createDataFrame(pairs, "id_a long, id_b long")
+    got = {r.doc_id: r.cluster_id for r in D.duplicate_clusters_star(df).collect()}
+    assert got == _union_find(pairs)
+
+
+def test_star_cc_stops_in_the_round_that_contracts(spark):
+    """Disjoint stars and cliques contract in one round. That round's
+    three shuffles and its result job are the whole cost: the stop test
+    rides on the round's own job, and no second round runs only to see
+    that nothing changed (that round alone would add four jobs)."""
+    pairs = [(a, b) for base in (1, 50) for a in range(base, base + 5)
+             for b in range(a + 1, base + 5)] + [(100, k) for k in range(101, 110)]
+    df = spark.createDataFrame(pairs, "id_a long, id_b long").localCheckpoint()
+    sc = spark.sparkContext
+    sc.setJobGroup("test_star_cc_one_round", "duplicate_clusters_star")
+    try:
+        D.duplicate_clusters_star(df)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    jobs = sc.statusTracker().getJobIdsForGroup("test_star_cc_one_round")
+    assert len(jobs) <= 5, len(jobs)
+
+
 def test_prefix_filter_lossless(spark, sf_dir):
     """Prefix filtering must be invisible in the result: identical pair
     set and identical jaccard values vs the exhaustive inverted join."""

@@ -9,6 +9,8 @@ change is job-shape-only) must use a different suffix (e.g. _note)."""
 import hashlib
 import os
 
+import pytest
+
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 # plans/r12 predates the lint (its triangle pair is the documented
 # counterexample); lint r13 onward
@@ -40,5 +42,5 @@ def test_before_after_pairs_differ():
                 "or the pair is not plan-diff evidence; use a _note "
                 "suffix for intentionally-identical captures"
             )
-    # vacuously green while a round has no pair yet
-    assert pairs >= 0
+    if not pairs:
+        pytest.skip(f"no *_before/*_after pair under {LINTED_DIRS}")
