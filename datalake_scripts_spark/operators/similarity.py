@@ -1464,7 +1464,11 @@ def pq_codebooks_kmeans_exact(
 
     - sample = rows with ``id_col < max_sample`` (the fixture's ids are
       dense from 0, so this is the bounded-driver-sample contract in a
-      predicate DuckDB can state);
+      predicate DuckDB can state), collected WITH their ids and ordered
+      by id on the driver — the sample is bounded and goes to the
+      driver anyway, so the order costs no exchange (a Spark-side
+      global sort would range-partition every sampled vector through a
+      shuffle) and does not depend on the input's partition order;
     - subvectors quantize to integers: ``floor(x * 2^20)`` — the
       power-of-two scaling only shifts the double's exponent, so the
       product is exact and the floor unambiguous in both engines;
@@ -1483,14 +1487,14 @@ def pq_codebooks_kmeans_exact(
     recall properties are asserted by the existing PQ harness."""
     import numpy as np
 
-    sample = (
-        corpus_df.filter(F.col(id_col) < max_sample)
-        .select(F.col(vec_col).cast("array<double>").alias("v"))
-        .orderBy(F.col(id_col))
+    sample = corpus_df.filter(F.col(id_col) < max_sample).select(
+        F.col(id_col).alias("id"),
+        F.col(vec_col).cast("array<double>").alias("v"),
     )
     rows = sample.collect()  # bounded by max_sample (dense-id contract)
     if not rows:
         return []
+    rows.sort(key=lambda r: r["id"])
     X = np.asarray([list(r["v"]) for r in rows], dtype=np.float64)
     d = X.shape[1]
     if d % m:

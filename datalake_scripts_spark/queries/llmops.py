@@ -3471,8 +3471,9 @@ def ann_pq_kmeans_rerank_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     the Lloyd iterations as CTEs — the linkage EM discipline — and
     then states the same ADC + rerank the stride twin
     ann_pq_rerank_topk uses. Codebook equality between the numpy
-    trainer and the SQL CTEs is additionally unit-tested in
-    tests/test_pq.py."""
+    trainer and the SQL CTEs is checked through the served rows: the
+    hash-exact DuckDB oracle comparison of this query
+    (scripts/selfcheck.py)."""
     emb = t(spark, sf_dir, "embeddings")
     q = emb.filter(F.col("vec_id") < 10)
     books = S.pq_codebooks_kmeans_exact(

@@ -233,3 +233,25 @@ def test_kmeans_full_shortlist_rerank_equals_exact(spark, emb):
     assert sorted(map(key, rer.collect())) == sorted(
         map(key, exact.collect())
     )
+
+
+def test_kmeans_exact_trainer_sorts_on_driver(spark, emb):
+    """The exact trainer's bounded sample reaches the driver anyway, so
+    ordering it by id there costs no exchange: a Spark-side global sort
+    would range-partition every sampled vector through a shuffle. The
+    books must also not depend on the order the input's partitions
+    arrive in — the id order is what makes them deterministic."""
+    from datalake_scripts_spark.operators.shufflemeter import (
+        max_stage_id,
+        shuffle_totals_since,
+    )
+
+    kw = dict(m=8, n_codewords=16, max_sample=500)
+    before = max_stage_id(spark)
+    books = S.pq_codebooks_kmeans_exact(emb, **kw)
+    assert shuffle_totals_since(spark, before)["shuffle_write"] == 0
+    assert len(books) == 8 and all(len(cb) == 16 for cb in books)
+    shuffled = emb.repartition(7, "embedding").sortWithinPartitions(
+        "vec_id", ascending=False
+    )
+    assert S.pq_codebooks_kmeans_exact(shuffled, **kw) == books
