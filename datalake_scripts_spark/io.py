@@ -67,6 +67,12 @@ def _read_events_arrow_fallback(spark: SparkSession, path: str) -> DataFrame:
     return spark.createDataFrame(pdf)
 
 
+def table_path(sf_dir: str, name: str) -> str:
+    """Where testdata table ``name`` lives: the path :func:`read_table`
+    reads, for callers that size work from the same files."""
+    return f"{sf_dir}/{name}.parquet"
+
+
 def read_table(
     spark: SparkSession, sf_dir: str, name: str, refresh: bool = False
 ) -> DataFrame:
@@ -89,7 +95,7 @@ def read_table(
     if cache is None:
         cache = {}
         spark._dls_read_cache = cache
-    path = f"{sf_dir}/{name}.parquet"
+    path = table_path(sf_dir, name)
     if refresh:
         cache.pop(path, None)
     if path in cache:

@@ -98,7 +98,7 @@ def learn_bpe(
 
     Driver traffic: ``batch`` rows per round. Plan growth: the vocab is
     localCheckpoint'ed every round, so each round's plan is constant-
-    size (same pattern as dedup.duplicate_clusters — without it the
+    size (same pattern as dedup.duplicate_clusters_star — without it the
     fold expressions nest and Catalyst re-analyzes the whole merge
     history every action).
     """

@@ -16,7 +16,10 @@ Scale design:
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame
+from functools import cached_property
+from typing import NamedTuple
+
+from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
 from .text import tokens
@@ -52,9 +55,14 @@ def word_shingles(col: str | Column, n: int = 3) -> Column:
 
 
 def _shingle_table(
-    df: DataFrame, id_col: str, text_col: str, n: int, block_col: str | None = None
+    df: DataFrame,
+    id_col: str | list[str],
+    text_col: str,
+    n: int,
+    block_col: str | None = None,
 ) -> DataFrame:
-    """(id[, block], shingle) inverted-index rows, distinct per doc.
+    """(id[, block], shingle) inverted-index rows, distinct per doc
+    (``id_col`` may be a list of key columns).
 
     No repartition here on purpose — re-measured round 3 with a proper
     same-session A/B: a pre-explode repartition(32) of the doc rows
@@ -65,7 +73,7 @@ def _shingle_table(
     the warm single-task HOF explode is cheap, and the extra shuffle +
     task overhead outweigh it. At real scale the input is already wide
     and the question is moot."""
-    cols = [F.col(id_col)]
+    cols = [F.col(c) for c in ([id_col] if isinstance(id_col, str) else id_col)]
     if block_col:
         cols.append(F.col(block_col))
     return df.select(
@@ -103,6 +111,236 @@ def cap_shingle_df(
     return sh.join(F.broadcast(hot), join_keys, "left_anti")
 
 
+class _WidthTables:
+    """The shingle-join core of the exact dedup tiers
+    (:func:`ngram_jaccard_pairs`, :func:`containment_pairs`,
+    :func:`ngram_jaccard_pairs_cross`), which doubles as the auto-tier
+    router's per-width probe.
+
+    The exact tiers materialize one table per width: ``sh``, the
+    uncapped (key[, block], shingle) inverted index with two window
+    columns over each (shingle[, block]) group — its document frequency
+    ``_df`` and a unique ``bigint`` token ``_tok``. That one df pass
+    serves both the hot-shingle cap and the rarity rank: the cap drops
+    whole groups, so a surviving group's capped df IS its uncapped df
+    (asserted in
+    tests/test_autotier.py::test_probe_matches_materialized_stats), and
+    ``ranked()`` is a filter of ``sh`` — no anti-join, no second
+    checkpoint, no second groupBy. ``packed()`` is the per-doc token
+    array every exact tier joins on.
+
+    ``probe=True`` (the router) also checkpoints the shingle table and
+    its per-group counts ``dfs``, a map-side-combined aggregation, for
+    ``mass`` and for ``capped()``, the MinHash tier's input: a width
+    the router rejects never shuffles its full shingle table.
+
+    Token order. Each doc's tokens are sorted by (df asc, tok asc):
+    rarest first, ties broken by the token id. The prefix, length and
+    positional filters of :func:`_token_pairs` are lossless under ANY
+    fixed total order of the shingle universe, as each only needs both
+    sides of a pair to sort their shared tokens the same way (see
+    there). So the pairs and their scores do not depend on which id a
+    group drew; and a token names one (shingle, block) group, so an
+    overlap of tokens is the overlap of shingles. Joins and
+    verification run on ``bigint`` keys and ``array<bigint>`` sets
+    instead of strings.
+
+    Materialize once. A group's token is the least
+    ``monotonically_increasing_id`` of its rows, and those ids depend on
+    the partitioning that draws them, so a recomputed ``sh`` could
+    number the groups differently. The token->doc mapping (``sh``'s
+    (key, _tok) rows) is therefore fixed in one checkpoint before any
+    consumer reads it. ``packed()`` is then a pure function of that
+    checkpoint — within a doc the (df, tok) pairs are distinct, so the
+    sorted array is the same however its rows arrive — and the four
+    branches of the pair query share its one shuffle instead of a
+    second checkpoint. (A checkpoint, not ``persist``: a lazy cache is
+    recomputed by each branch of its first job, and cached entries
+    outlive the query in the session's CacheManager. Checkpoints drop
+    lineage, so a lost executor fails the job instead of recomputing:
+    acceptable for this small intermediate.)
+    """
+
+    def __init__(self, df, id_col, text_col, n, block_col,
+                 max_df_frac, min_df_keep, n_docs=None, probe=True):
+        self.keys = [id_col] if isinstance(id_col, str) else list(id_col)
+        self.block_col = block_col
+        self.join_keys = ["shingle"] + ([block_col] if block_col else [])
+        self.n_docs = df.count() if n_docs is None else n_docs
+        self.cap = max(max_df_frac * self.n_docs, float(min_df_keep))
+        self.shingles = _shingle_table(df, self.keys, text_col, n, block_col)
+        if probe:
+            # the router reads the shingle table twice (df stats, then
+            # the chosen tier) and the df stats twice (mass, hot list)
+            self.shingles = self.shingles.localCheckpoint()
+            self.dfs = (
+                self.shingles.groupBy(*self.join_keys)
+                .agg(F.count(F.lit(1)).alias("_df"))
+                .localCheckpoint()
+            )
+
+    @property
+    def mass(self) -> int:
+        return shingle_pair_mass(self.dfs.filter(F.col("_df") <= self.cap))
+
+    def capped(self) -> DataFrame:
+        """The capped shingle table (the MinHash tier's input),
+        checkpointed — its consumers (signatures, sizes, both verify
+        sides) branch 4 ways."""
+        hot = self.dfs.filter(F.col("_df") > self.cap).select(*self.join_keys)
+        # bcast: O(cap) — hot list bounded by contract
+        return self.shingles.join(
+            F.broadcast(hot), self.join_keys, "left_anti"
+        ).localCheckpoint()
+
+    @cached_property
+    def sh(self) -> DataFrame:
+        """The shingle table with ``_df`` and ``_tok`` per row,
+        checkpointed on first use (see the class note)."""
+        # a group's token is the least id of its rows, the ids drawn
+        # before the window's exchange
+        by_group = Window.partitionBy(*self.join_keys)
+        return (
+            self.shingles.withColumn("_row", F.monotonically_increasing_id())
+            .select(
+                *self.keys, *self.join_keys,
+                F.count(F.lit(1)).over(by_group).alias("_df"),
+                F.min("_row").over(by_group).alias("_tok"),
+            )
+            .localCheckpoint()
+        )
+
+    def ranked(self) -> DataFrame:
+        """The capped (key[, block], shingle, _df, _tok) index."""
+        return self.sh.filter(F.col("_df") <= self.cap)
+
+    def packed(self) -> DataFrame:
+        """Per doc: ``_toks``, its tokens sorted by (df, tok), and
+        ``_n_sh``, their count (see the class note). A NULL key or
+        block pairs with nothing, as in an equi-join on it; dropping
+        them here also keeps every consumer's plan identical, so all
+        four share one exchange."""
+        not_null = self.keys + ([self.block_col] if self.block_col else [])
+        return (
+            self.ranked()
+            .filter(" AND ".join(f"`{c}` IS NOT NULL" for c in not_null))
+            .groupBy(*self.keys)
+            .agg(
+                F.expr("transform(sort_array(collect_list(struct(_df, _tok))),"
+                       " x -> x._tok)").alias("_toks")
+            )
+            # a projection, not a second aggregate: a consumer that needs
+            # no size still reads the same aggregation
+            .withColumn("_n_sh", F.size("_toks").cast("bigint"))
+        )
+
+
+class _PairSpec(NamedTuple):
+    """One exact tier over :func:`_token_pairs`, as SQL fragments over
+    the prefix rows ``a``/``b`` (``_id``, set size ``_n``, 1-based
+    position ``_r``) and the verified rows (``_ia``, ``_ib``, sizes
+    ``_na``/``_nb``, overlap ``_i``, score ``_s``)."""
+
+    pair: str          # which (left, right) docs may pair
+    bound: str         # lossless candidate bound (length/positional)
+    score: str
+    out: str           # the output columns
+    right_prefix: bool  # False: the right side stays fully indexed
+
+
+# prefix of a doc's rarity-sorted tokens that must hold a shared token
+# of any qualifying pair: |A∩B| >= ceil(t*|A|) leaves at most
+# |A| - ceil(t*|A|) shared tokens outside it
+_PREFIX = "slice(_toks, 1, CAST(_n_sh - ceil(:t * _n_sh) + 1 AS INT))"
+
+_JACCARD_BOUND = (
+    # length: J >= t forces min(|A|,|B|) >= t * max(|A|,|B|)
+    "CAST(least(a._n, b._n) AS DOUBLE) >= :t * CAST(greatest(a._n, b._n) AS DOUBLE)"
+    # positional (PPJoin): past a shared token at (ra, rb) the overlap
+    # is at most 1 + min(|A|-ra, |B|-rb), which must reach
+    # t/(1+t) * (|A|+|B|)
+    " AND CAST(1 + least(a._n - a._r, b._n - b._r) AS DOUBLE)"
+    " >= :t / (1.0D + :t) * CAST(a._n + b._n AS DOUBLE)"
+)
+_JACCARD_SCORE = "CAST(_i AS DOUBLE) / CAST(_na + _nb - _i AS DOUBLE)"
+
+_JACCARD = _PairSpec(
+    "a._id < b._id", _JACCARD_BOUND, _JACCARD_SCORE,
+    "_ia AS id_a, _ib AS id_b, _s AS jaccard", True,
+)
+_CONTAINMENT = _PairSpec(
+    "a._id != b._id",
+    # positional, asymmetric: past (ra, rb) at most 1 + min(|A|-ra,
+    # |B|-rb) more shared tokens, and A needs ceil(t*|A|)
+    "1 + least(a._n - a._r, b._n - b._r) >= ceil(:t * a._n)",
+    "CAST(_i AS DOUBLE) / CAST(_na AS DOUBLE)",
+    "_ia AS id_contained, _ib AS id_container, _s AS containment,"
+    " _na AS n_contained, _nb AS n_container",
+    False,
+)
+_CROSS = _PairSpec(
+    "TRUE", _JACCARD_BOUND, _JACCARD_SCORE,
+    "_ia AS batch_id, _ib AS corpus_id, _s AS jaccard", True,
+)
+
+
+def _token_pairs(
+    left: DataFrame,
+    right: DataFrame,
+    id_col: str,
+    threshold: float,
+    spec: _PairSpec,
+    prefix_filter: bool = True,
+) -> DataFrame:
+    """Candidate and verify plan over two ``packed()`` relations (the
+    same one for a self-join), as one SQL statement: one parse and one
+    analysis instead of dozens of DataFrame calls.
+
+    Prefix rows join on ``_tok`` alone (a token already names its
+    block), ``spec.bound`` prunes them, ``DISTINCT`` leaves one row per
+    pair, and each candidate is verified exactly with
+    ``size(array_intersect)`` of the full ``array<bigint>`` sets.
+
+    Lossless (Bayardo all-pairs / PPJoin): both sides sort their
+    tokens by the same total order. A qualifying pair needs
+    |A∩B| >= ceil(t*|A|) (for Jaccard on both sides, as |B| >= |A∩B|);
+    if its first shared token lay beyond A's prefix, all of A∩B would
+    sit in A's last ceil(t*|A|) - 1 positions. So the first shared
+    token lies in every exploded prefix, and at its positions the
+    positional bound still counts every shared token after it, so that
+    row passes. ``prefix_filter=False`` joins the full sets without
+    bounds: the exhaustive path that audits this one.
+    """
+    left_toks = _PREFIX if prefix_filter else "_toks"
+    right_toks = _PREFIX if prefix_filter and spec.right_prefix else "_toks"
+    bound = spec.bound if prefix_filter else "TRUE"
+    key = f"`{id_col}`"
+    return left.sparkSession.sql(
+        f"""
+        WITH a AS (
+          SELECT {key} AS _id, _n_sh AS _n, _p + 1 AS _r, _tok FROM {{left}}
+          LATERAL VIEW posexplode({left_toks}) AS _p, _tok),
+        b AS (
+          SELECT {key} AS _id, _n_sh AS _n, _p + 1 AS _r, _tok FROM {{right}}
+          LATERAL VIEW posexplode({right_toks}) AS _p, _tok),
+        cand AS (
+          SELECT DISTINCT a._id AS _ia, b._id AS _ib
+          FROM a JOIN b ON a._tok = b._tok
+          WHERE {spec.pair} AND {bound}),
+        v AS (
+          SELECT _ia, _ib, l._n_sh AS _na, r._n_sh AS _nb,
+                 size(array_intersect(l._toks, r._toks)) AS _i
+          FROM cand JOIN {{left}} l ON l.{key} = _ia
+          JOIN {{right}} r ON r.{key} = _ib),
+        s AS (SELECT *, {spec.score} AS _s FROM v)
+        SELECT {spec.out} FROM s WHERE _s >= :t
+        """,
+        args={"t": float(threshold)},
+        left=left,
+        right=right,
+    )
+
+
 def ranked_shingle_table(
     df: DataFrame,
     id_col: str,
@@ -112,27 +350,17 @@ def ranked_shingle_table(
     max_df_frac: float = 0.5,
     min_df_keep: int = 100,
 ) -> DataFrame:
-    """Shared rarity-rank relation for the shingle-dedup family
-    (VERDICT r4 stretch #8): the capped inverted index with each
-    shingle's document frequency attached — (id[, block], shingle,
-    _df), localCheckpointed. :func:`ngram_jaccard_pairs` and
-    :func:`containment_pairs` accept it via ``ranked_shingles`` and
-    then skip their own shingle explode, hot-key cap, AND df
-    aggregation + join — the two heaviest shared passes — so a
-    pipeline running both ops pays them once. Solo runs should pass
-    nothing: the in-operator pipeline avoids materializing the wide
-    (id, shingle, _df) relation (measured slower solo, r4 note).
-
-    The df values (and therefore the rarest-first global order and
-    every prefix) are identical to what each operator computes
-    internally, so outputs are hash-identical either way
-    (test_dedup_shared_rank)."""
-    n_docs = df.count()
-    join_keys = ["shingle"] + ([block_col] if block_col else [])
-    sh0 = _shingle_table(df, id_col, text_col, n, block_col).localCheckpoint()
-    sh = cap_shingle_df(sh0, join_keys, n_docs, max_df_frac, min_df_keep)
-    dfs = sh.groupBy(*join_keys).agg(F.count(F.lit(1)).alias("_df"))
-    return sh.join(dfs, join_keys).localCheckpoint()
+    """The per-doc token relation of :class:`_WidthTables` —
+    (id, _toks, _n_sh) — for a pipeline that runs both
+    :func:`ngram_jaccard_pairs` and :func:`containment_pairs` over the
+    same width and cap: pass it as ``ranked_shingles`` and the doc
+    count, shingle explode and df pass are paid once. Outputs are
+    identical to the solo calls
+    (test_shared_rank_table_outputs_identical)."""
+    return _WidthTables(
+        df, id_col, text_col, n, block_col, max_df_frac, min_df_keep,
+        probe=False,
+    ).packed()
 
 
 def ngram_jaccard_pairs(
@@ -147,189 +375,29 @@ def ngram_jaccard_pairs(
     prefix_filter: bool = True,
     ranked_shingles: DataFrame | None = None,
 ) -> DataFrame:
-    """Near-duplicate pairs by exact n-gram Jaccard, via inverted index
-    with prefix filtering. ``ranked_shingles`` (from
-    :func:`ranked_shingle_table`) skips the shingle/cap/df passes when
-    a pipeline shares them across ops; output is hash-identical.
+    """Near-duplicate pairs by exact n-gram Jaccard, via an inverted
+    index with prefix filtering (the core: :class:`_WidthTables` and
+    :func:`_token_pairs`). Returns (id_a, id_b, jaccard) with
+    id_a < id_b and jaccard >= threshold.
 
-    shingle-explode -> hot-shingle df cap (see :func:`cap_shingle_df`)
-    -> PREFIX-filtered self-join on shingle -> exact verify.
-    ``block_col`` (e.g. language) restricts pairs to the same block,
-    shrinking the candidate space. Per-doc sizes are counted AFTER the
-    cap, so Jaccard is exact over the capped shingle universe
-    (self-consistent; scores involving dropped stopword shingles are
-    deliberately not representable). Returns (id_a, id_b, jaccard) with
-    id_a < id_b.
-
-    Prefix filtering (Bayardo et al. all-pairs / PPJoin family): under
-    a global rarest-first shingle order, any pair with J >= t shares a
-    shingle within each side's first ``n_sh - ceil(t * n_sh) + 1``
-    shingles (J >= t implies |A∩B| >= t*|A|, so an intersection element
-    survives in the prefix). The inverted-index self-join therefore
-    explodes only prefixes — candidate volume shrinks ~(1-t)^2 and the
-    rarest-first order moves the join key DISTRIBUTION toward uniform
-    (rare shingles carry the prefixes). Verification computes exact
-    |A∩B| via array_intersect of the full per-doc shingle sets, joined
-    only to surviving candidates. LOSSLESS: the result set is
-    bit-identical to the exhaustive join (property-tested both ways);
-    ``prefix_filter=False`` keeps the exhaustive path for audits.
+    ``block_col`` (e.g. language) restricts pairs to the same block.
+    Shingles hotter than max(max_df_frac * docs, min_df_keep) are
+    dropped (see :func:`cap_shingle_df`), and per-doc sizes are counted
+    AFTER the cap, so Jaccard is exact over the capped shingle universe
+    (scores involving dropped stopword shingles are deliberately not
+    representable). ``ranked_shingles`` (from
+    :func:`ranked_shingle_table`) skips the shingle, df and packing
+    passes. ``prefix_filter=False`` keeps the exhaustive join for
+    audits; both paths return the same rows (property-tested).
     """
-    join_keys = ["shingle"] + ([block_col] if block_col else [])
-    blk = [block_col] if block_col else []
-    if ranked_shingles is not None:
-        sh = ranked_shingles
-    else:
-        n_docs = df.count()  # parquet-metadata count — cheap even at scale
-    # EAGER localCheckpoint (not lazy persist) on the shared shingle
-    # tables, for two measured reasons: (1) each table feeds 2+ branches
-    # of one DAG (hot-key agg + main; df ranking + prefix join + verify
-    # sets), and a LAZY cache is recomputed by every branch on the first
-    # job — 3x the operator's runtime; (2) persist() entries live in the
-    # session's CacheManager until unpersist, so a harness running the
-    # whole registry in one session accumulates eviction churn, while
-    # checkpoint blocks are GC'd with the query's DataFrames. Trade-off:
-    # checkpoints drop lineage, so a lost executor means job failure
-    # instead of recompute — acceptable for these small intermediates.
-        sh0 = _shingle_table(df, id_col, text_col, n, block_col).localCheckpoint()
-        sh = cap_shingle_df(
-            sh0, join_keys, n_docs, max_df_frac, min_df_keep
-        ).localCheckpoint()
-
-    if not prefix_filter:
-        sizes = sh.groupBy(id_col).agg(F.count(F.lit(1)).alias("n_sh"))
-        a = sh.select(F.col(id_col).alias("id_a"), *join_keys)
-        b = sh.select(F.col(id_col).alias("id_b"), *join_keys)
-        inter = (
-            a.join(b, join_keys)
-            .filter(F.col("id_a") < F.col("id_b"))
-            .groupBy("id_a", "id_b")
-            .agg(F.count(F.lit(1)).alias("n_inter"))
-        )
-        sa = sizes.select(F.col(id_col).alias("id_a"), F.col("n_sh").alias("n_a"))
-        sb = sizes.select(F.col(id_col).alias("id_b"), F.col("n_sh").alias("n_b"))
-        return (
-            inter.join(sa, "id_a")
-            .join(sb, "id_b")
-            .select(
-                "id_a",
-                "id_b",
-                (
-                    F.col("n_inter").cast("double")
-                    / (F.col("n_a") + F.col("n_b") - F.col("n_inter")).cast("double")
-                ).alias("jaccard"),
-            )
-            .filter(F.col("jaccard") >= threshold)
-        )
-
-    # global rarest-first order: df asc, shingle asc as tie-break (any
-    # fixed total order is valid; rarity maximizes pruning). ONE per-doc
-    # aggregation packs each doc's shingles as a rarity-sorted struct
-    # array — sort_array over struct(_df, shingle) IS the (df, shingle)
-    # order the old window produced — so the prefix is a slice/
-    # posexplode (positions ride along for the PPJoin filter) and the
-    # verify arrays are a transform of the same packed column: one
-    # id-keyed shuffle instead of three (window rank + sets agg),
-    # no per-partition window sort. Output hash-identical (r3 #8).
-    # (A/B note: fusing the df pass with the hot-key cap — one groupBy
-    # + a checkpointed dfs — measured 0.4s SLOWER at sf0.1 than this
-    # shape; the extra materialization outweighs the saved pass.)
-    if ranked_shingles is not None:
-        ranked = sh  # _df already attached by ranked_shingle_table
-    else:
-        dfs = sh.groupBy(*join_keys).agg(F.count(F.lit(1)).alias("_df"))
-        ranked = sh.join(dfs, join_keys)
-    packed = (
-        ranked
-        .groupBy(id_col)
-        .agg(
-            F.sort_array(F.collect_list(F.struct("_df", "shingle"))).alias("_rk"),
-            F.count(F.lit(1)).alias("_n_sh"),
-            *([F.first(block_col).alias(block_col)] if blk else []),
-        )
-        .localCheckpoint()  # feeds both prefix sides + both verify sides
-    )
-    plen = (
-        F.col("_n_sh") - F.ceil(F.lit(float(threshold)) * F.col("_n_sh")) + F.lit(1)
-    ).cast("int")
-    prefix = packed.select(
-        id_col,
-        *blk,
-        "_n_sh",
-        F.posexplode(F.slice("_rk", F.lit(1), plen)).alias("_pos", "_x"),
-    ).select(
-        id_col,
-        *blk,
-        "_n_sh",
-        (F.col("_pos") + 1).alias("_rn"),
-        F.col("_x.shingle").alias("shingle"),
-    )
-    # length + positional filters ride along for free (sizes and
-    # positions are already on the prefix rows):
-    # - length: J >= t forces min(|A|,|B|) >= t * max(|A|,|B|);
-    # - positional (PPJoin): a shared prefix token at sorted positions
-    #   (i, j) bounds the overlap by 1 + min(|A|-i, |B|-j), which must
-    #   reach t/(1+t) * (|A|+|B|). Lossless with filter-then-distinct:
-    #   under the global (df, shingle) order, a qualifying pair's FIRST
-    #   shared token has every other shared token after it on BOTH
-    #   sides, so its row always passes.
-    pa = prefix.select(
-        F.col(id_col).alias("id_a"), F.col("_n_sh").alias("_na"),
-        F.col("_rn").alias("_ra"), *join_keys,
-    )
-    pb = prefix.select(
-        F.col(id_col).alias("id_b"), F.col("_n_sh").alias("_nb"),
-        F.col("_rn").alias("_rb"), *join_keys,
-    )
-    t_frac = float(threshold) / (1.0 + float(threshold))
-    cand = (
-        pa.join(pb, join_keys)
-        .filter(F.col("id_a") < F.col("id_b"))
-        .filter(
-            F.least("_na", "_nb").cast("double")
-            >= F.lit(float(threshold)) * F.greatest("_na", "_nb").cast("double")
-        )
-        .filter(
-            (
-                1
-                + F.least(
-                    F.col("_na") - F.col("_ra"), F.col("_nb") - F.col("_rb")
-                )
-            ).cast("double")
-            >= F.lit(t_frac) * (F.col("_na") + F.col("_nb")).cast("double")
-        )
-        .select("id_a", "id_b")
-        .distinct()
-    )
-    # exact verify on candidates only: per-doc shingle sets derived
-    # from the SAME packed aggregation (array_intersect is order-
-    # insensitive, so the rarity-sorted array serves as-is — no second
-    # full-table aggregation)
-    sets = packed.select(
-        id_col,
-        F.transform("_rk", lambda x: x["shingle"]).alias("_arr"),
-        "_n_sh",
-    )
-    sa = sets.select(
-        F.col(id_col).alias("id_a"), F.col("_arr").alias("_aa"),
-        F.col("_n_sh").alias("n_a"),
-    )
-    sb = sets.select(
-        F.col(id_col).alias("id_b"), F.col("_arr").alias("_ab"),
-        F.col("_n_sh").alias("n_b"),
-    )
-    n_inter = F.size(F.array_intersect(F.col("_aa"), F.col("_ab")))
-    return (
-        cand.join(sa, "id_a")
-        .join(sb, "id_b")
-        .select(
-            "id_a",
-            "id_b",
-            (
-                n_inter.cast("double")
-                / (F.col("n_a") + F.col("n_b") - n_inter).cast("double")
-            ).alias("jaccard"),
-        )
-        .filter(F.col("jaccard") >= threshold)
+    if ranked_shingles is None:
+        ranked_shingles = _WidthTables(
+            df, id_col, text_col, n, block_col, max_df_frac, min_df_keep,
+            probe=False,
+        ).packed()
+    return _token_pairs(
+        ranked_shingles, ranked_shingles, id_col, threshold, _JACCARD,
+        prefix_filter,
     )
 
 
@@ -414,7 +482,7 @@ def minhash_lsh_pairs(
     # Eager localCheckpoint, not lazy persist: multi-branch consumers
     # would recompute a lazy cache per branch, and checkpoint blocks are
     # GC'd after the query instead of pinning the session's CacheManager
-    # (see ngram_jaccard_pairs barrier note).
+    # (see the _WidthTables note).
     if capped_shingles is not None:
         sh = capped_shingles
     else:
@@ -647,92 +715,11 @@ def embedding_near_dup_pairs(
     )
 
 
-def duplicate_clusters(pairs: DataFrame, max_iters: int = 15) -> DataFrame:
-    """Connected components of the duplicate-pair graph by iterative
-    min-label propagation with pointer jumping: each round every node
-    adopts min(own label, neighbors' labels, label-of-its-label). The
-    pointer-jump halves the distance to the cluster minimum each round,
-    so convergence is O(log diameter) joins — a 1000-hop chain resolves
-    in ~10 rounds instead of 1000. Returns (doc_id, cluster_id) for
-    every node appearing in a pair, cluster_id = min doc_id reachable.
-
-    Raises if the loop exits by iteration count without converging
-    (silent partial labels would split one duplicate cluster across ids
-    — exactly the wrong failure mode for a dedup pipeline). At very
-    large scale swap in large-star/small-star (fewer skewed shuffles);
-    the fixpoint loop shape is the same.
-    """
-    edges = (
-        pairs.select(F.col("id_a").alias("src"), F.col("id_b").alias("dst"))
-        .unionByName(
-            pairs.select(F.col("id_b").alias("src"), F.col("id_a").alias("dst"))
-        )
-        .distinct()
-        .persist()
-    )
-    labels = edges.groupBy("src").agg(F.min("dst").alias("nbr_min"))
-    # localCheckpoint (not persist): truncates the logical plan so each
-    # iteration's analysis/optimization works on a constant-size tree —
-    # with persist alone the lineage grows per round and Catalyst
-    # re-optimizes the whole history every action (measured: the
-    # driver-side plan work, not the joins, dominated the loop)
-    labels = labels.select(
-        F.col("src").alias("doc_id"),
-        F.least("src", "nbr_min").alias("cluster_id"),
-    ).localCheckpoint()
-    converged = False
-    for _ in range(max_iters):
-        # propagate: min over neighbors' labels
-        nbr = (
-            edges.join(labels, edges.dst == labels.doc_id)
-            .groupBy("src")
-            .agg(F.min("cluster_id").alias("nbr_label"))
-        )
-        # pointer jump: the label of my current label
-        hop = labels.select(
-            F.col("doc_id").alias("_lbl"), F.col("cluster_id").alias("hop_label")
-        )
-        # the convergence flag rides along in the same join (old label is
-        # already on the row) — no separate old-vs-new join per round
-        new_labels = (
-            labels.join(nbr, labels.doc_id == nbr.src, "left")
-            .join(hop, labels.cluster_id == hop._lbl, "left")
-            .select(
-                "doc_id",
-                F.least(
-                    F.col("cluster_id"),
-                    F.coalesce("nbr_label", F.col("cluster_id")),
-                    F.coalesce("hop_label", F.col("cluster_id")),
-                ).alias("new_cluster_id"),
-                F.col("cluster_id").alias("_old"),
-            )
-            .localCheckpoint()
-        )
-        changed = (
-            new_labels.filter(F.col("new_cluster_id") != F.col("_old"))
-            .limit(1)
-            .count()
-        )
-        labels = new_labels.select(
-            "doc_id", F.col("new_cluster_id").alias("cluster_id")
-        )
-        if changed == 0:
-            converged = True
-            break
-    edges.unpersist()
-    if not converged:
-        raise RuntimeError(
-            f"duplicate_clusters did not converge in {max_iters} iterations; "
-            "labels would silently split clusters — raise max_iters "
-            "(pointer jumping makes the requirement ~log2(graph diameter))"
-        )
-    return labels
-
-
 def duplicate_clusters_star(pairs: DataFrame, max_iters: int = 25) -> DataFrame:
-    """Connected components by alternating large-star / small-star
-    (Kiveris et al., "Connected Components in MapReduce and Beyond") —
-    the at-scale alternative to :func:`duplicate_clusters`.
+    """Connected components of the duplicate-pair graph by alternating
+    large-star / small-star (Kiveris et al., "Connected Components in
+    MapReduce and Beyond") — the step after pairwise dedup that yields
+    keep-one-per-CLUSTER semantics (a~b, b~c collapse a, b, c).
 
     Each round rewires edges, oriented u > v, toward per-neighborhood
     minima, both computed as ``min(v) OVER (PARTITION BY u)`` (no
@@ -758,12 +745,13 @@ def duplicate_clusters_star(pairs: DataFrame, max_iters: int = 25) -> DataFrame:
     is not enough: the chain 1-3-4-5-2 leaves one round as
     {3->1, 4->1, 3->2, 5->2}, where 3 has two parents.
 
-    Returns (doc_id, cluster_id), identical to :func:`duplicate_clusters`
-    (equivalence is tested on chains, cliques, forests, and random
-    graphs against a union-find). Raises if ``max_iters`` rounds end
-    without a star forest.
+    Returns (doc_id, cluster_id) for every node in a pair, cluster_id =
+    the component's minimum id (tested on chains, cliques, forests, and
+    random graphs against a union-find). Raises if ``max_iters`` rounds
+    end without a star forest: silent partial labels would split one
+    duplicate cluster across ids.
     """
-    from pyspark.sql import Observation, Window
+    from pyspark.sql import Observation
 
     by_u = Window.partitionBy("u")
     # self-loops and duplicate pairs need no filter: a self-loop emits
@@ -814,6 +802,10 @@ def duplicate_clusters_star(pairs: DataFrame, max_iters: int = 25) -> DataFrame:
         f"duplicate_clusters_star did not converge in {max_iters} rounds "
         "(expected ~log2(n)); raise max_iters"
     )
+
+
+# the one connected-components implementation, under its older name too
+duplicate_clusters = duplicate_clusters_star
 
 
 def semantic_dedup(
@@ -986,158 +978,23 @@ def containment_pairs(
     id_contained != id_container (both directions of an A/B pair can
     qualify independently; exact dups qualify both ways).
 
-    Scale shape — the ASYMMETRIC prefix filter (set-containment-join
-    form of Bayardo/PPJoin): |A∩B| >= ceil(t*|A|) forces a shared
-    shingle inside A's first (|A| - ceil(t*|A|) + 1) shingles under any
-    global total order (rarest-first here, same as
-    :func:`ngram_jaccard_pairs`), so only the CONTAINED side explodes
-    prefixes; the container side must stay fully indexed (containment
-    puts no lower bound relative to the container's own size — there is
-    no length filter by construction). Candidate volume ~(1-t) * the
-    exhaustive join, join keys rarest-first near-uniform. LOSSLESS vs
-    the exhaustive path (``prefix_filter=False``), property-tested.
-    Hot-shingle df cap as in :func:`cap_shingle_df`; containment is
-    exact over the capped shingle universe (self-consistent).
+    Same core as :func:`ngram_jaccard_pairs`, with the ASYMMETRIC
+    prefix filter (set-containment-join form of Bayardo/PPJoin): only
+    the CONTAINED side explodes its prefix; the container side stays
+    fully indexed (containment puts no bound relative to the
+    container's own size, so there is no length filter), and the
+    positional filter takes its asymmetric form. Hot-shingle cap,
+    ``ranked_shingles`` and ``prefix_filter=False`` as there;
+    containment is exact over the capped shingle universe.
     """
-    join_keys = ["shingle"] + ([block_col] if block_col else [])
-    blk = [block_col] if block_col else []
-    if ranked_shingles is not None:
-        sh = ranked_shingles
-    else:
-        n_docs = df.count()
-        sh0 = _shingle_table(df, id_col, text_col, n, block_col).localCheckpoint()
-        sh = cap_shingle_df(
-            sh0, join_keys, n_docs, max_df_frac, min_df_keep
-        ).localCheckpoint()
-
-    if prefix_filter:
-        # ONE per-doc aggregation replaces the old sets-agg + df-join +
-        # two-window ranking (r3 stretch #8): pack each doc's shingles
-        # as a rarity-sorted struct array — sort_array over
-        # struct(_df, shingle) IS the (df asc, shingle asc) global
-        # order the window produced — then the prefix is a slice/
-        # posexplode (no window sort pass) and the verify arrays are a
-        # transform of the same packed column. Saves one full id-keyed
-        # shuffle and the per-partition window sort; output identical
-        # (hash-equal, test_dedup A/B).
-        if ranked_shingles is not None:
-            ranked = sh  # _df already attached by ranked_shingle_table
-        else:
-            dfs = sh.groupBy(*join_keys).agg(F.count(F.lit(1)).alias("_df"))
-            ranked = sh.join(dfs, join_keys)
-        packed = (
-            ranked
-            .groupBy(id_col)
-            .agg(
-                F.sort_array(F.collect_list(F.struct("_df", "shingle"))).alias("_rk"),
-                F.count(F.lit(1)).alias("_n_sh"),
-                *([F.first(block_col).alias(block_col)] if blk else []),
-            )
-            .localCheckpoint()  # feeds prefix side + both verify sides
-        )
-        plen = (
-            F.col("_n_sh")
-            - F.ceil(F.lit(float(threshold)) * F.col("_n_sh"))
-            + F.lit(1)
-        ).cast("int")
-        la = (
-            packed.select(
-                F.col(id_col).alias("id_contained"),
-                *blk,
-                F.col("_n_sh").alias("_na"),
-                F.posexplode(F.slice("_rk", F.lit(1), plen)).alias("_pa", "_x"),
-            )
-            .select(
-                "id_contained", *blk, "_na",
-                (F.col("_pa") + 1).alias("_ra"),
-                F.col("_x.shingle").alias("shingle"),
-            )
-        )
-        # container side carries POSITIONS too (posexplode of the same
-        # packed array): a qualifying pair needs |A∩B| >= ceil(t*|A|),
-        # and past a shared token at sorted positions (ra, rb) the
-        # overlap is bounded by 1 + min(|A|-ra, |B|-rb) — the PPJoin
-        # positional filter, asymmetric form. LOSSLESS with the final
-        # distinct: under the global (df, shingle) order, the FIRST
-        # shared token of a qualifying pair has every other shared
-        # token after it on BOTH sides, so its row always passes
-        # (measured: 2.44M -> 1.48M candidates, verify 3.8s -> 2.9s).
-        rb = (
-            packed.select(
-                F.col(id_col).alias("id_container"),
-                *blk,
-                F.col("_n_sh").alias("_nb"),
-                F.posexplode("_rk").alias("_pb", "_y"),
-            )
-            .select(
-                "id_container", *blk, "_nb",
-                (F.col("_pb") + 1).alias("_rb"),
-                F.col("_y.shingle").alias("shingle"),
-            )
-        )
-        cand = (
-            la.join(rb, join_keys)
-            .filter(F.col("id_contained") != F.col("id_container"))
-            .filter(
-                (
-                    1
-                    + F.least(
-                        F.col("_na") - F.col("_ra"),
-                        F.col("_nb") - F.col("_rb"),
-                    )
-                )
-                >= F.ceil(F.lit(float(threshold)) * F.col("_na"))
-            )
-            .select("id_contained", "id_container")
-            .distinct()
-        )
-        sets = packed.select(
-            id_col,
-            F.transform("_rk", lambda x: x["shingle"]).alias("_arr"),
-            "_n_sh",
-        )
-    else:
-        la = sh.select(F.col(id_col).alias("id_contained"), *join_keys)
-        rb = sh.select(F.col(id_col).alias("id_container"), *join_keys)
-        cand = (
-            la.join(rb, join_keys)
-            .filter(F.col("id_contained") != F.col("id_container"))
-            .select("id_contained", "id_container")
-            .distinct()
-        )
-        # full per-doc sets (verify side + container index sizes)
-        sets = (
-            sh.groupBy(id_col)
-            .agg(
-                F.sort_array(F.collect_list("shingle")).alias("_arr"),
-                F.count(F.lit(1)).alias("_n_sh"),
-            )
-            .localCheckpoint()
-        )
-    sa = sets.select(
-        F.col(id_col).alias("id_contained"),
-        F.col("_arr").alias("_aa"),
-        F.col("_n_sh").alias("n_contained"),
-    )
-    sb = sets.select(
-        F.col(id_col).alias("id_container"),
-        F.col("_arr").alias("_ab"),
-        F.col("_n_sh").alias("n_container"),
-    )
-    n_inter = F.size(F.array_intersect(F.col("_aa"), F.col("_ab")))
-    return (
-        cand.join(sa, "id_contained")
-        .join(sb, "id_container")
-        .select(
-            "id_contained",
-            "id_container",
-            (n_inter.cast("double") / F.col("n_contained").cast("double")).alias(
-                "containment"
-            ),
-            "n_contained",
-            "n_container",
-        )
-        .filter(F.col("containment") >= threshold)
+    if ranked_shingles is None:
+        ranked_shingles = _WidthTables(
+            df, id_col, text_col, n, block_col, max_df_frac, min_df_keep,
+            probe=False,
+        ).packed()
+    return _token_pairs(
+        ranked_shingles, ranked_shingles, id_col, threshold, _CONTAINMENT,
+        prefix_filter,
     )
 
 
@@ -1151,6 +1008,7 @@ def ngram_jaccard_pairs_cross(
     block_col: str | None = None,
     max_df_frac: float = 0.5,
     min_df_keep: int = 100,
+    prefix_filter: bool = True,
 ) -> DataFrame:
     """INCREMENTAL near-dup: Jaccard >= t pairs between a NEW batch and
     an EXISTING corpus only (never corpus x corpus) — the production
@@ -1161,102 +1019,23 @@ def ngram_jaccard_pairs_cross(
     the corpus side is a persisted/bucketed (id, shingle) table that
     amortizes across ingests.
 
-    Same inverted-index + Bayardo prefix machinery as
-    :func:`ngram_jaccard_pairs` (symmetric J >= t, so BOTH sides
-    explode only prefixes; df for the rarest-first order comes from
-    the UNION of both sides so the global shingle order is consistent).
-    Hot-shingle df cap over the union too (same self-consistency
-    contract). Returns (batch_id, corpus_id, jaccard).
+    Same core as :func:`ngram_jaccard_pairs` over the UNION of both
+    sides, each doc keyed by (side, id) so an id may appear on both:
+    the df, and so the token order and the hot-shingle cap, are
+    union-consistent, and both sides explode only prefixes. Returns
+    (batch_id, corpus_id, jaccard).
     """
-    from pyspark.sql import Window as W
-
-    n_docs = batch.count() + corpus.count()
-    blk = [block_col] if block_col else []
-    join_keys = ["shingle"] + blk
-    shb0 = _shingle_table(batch, id_col, text_col, n, block_col)
-    shc0 = _shingle_table(corpus, id_col, text_col, n, block_col)
-    both = shb0.withColumn("_side", F.lit("b")).unionByName(
-        shc0.withColumn("_side", F.lit("c"))
-    ).localCheckpoint()
-    both = cap_shingle_df(
-        both, join_keys, n_docs, max_df_frac, min_df_keep
-    ).localCheckpoint()
-
-    dfs = both.groupBy(*join_keys).agg(F.count(F.lit(1)).alias("_df"))
-    w_rank = W.partitionBy("_side", id_col, *blk).orderBy("_df", "shingle")
-    w_all = W.partitionBy("_side", id_col, *blk)
-    ranked = both.join(dfs, join_keys).select(
-        "_side",
-        id_col,
-        *blk,
-        "shingle",
-        F.row_number().over(w_rank).alias("_rn"),
-        F.count(F.lit(1)).over(w_all).alias("_n_sh"),
+    cols = [id_col, text_col] + ([block_col] if block_col else [])
+    docs = batch.select(F.lit(0).alias("_side"), *cols).unionByName(
+        corpus.select(F.lit(1).alias("_side"), *cols)
     )
-    prefix = ranked.filter(
-        F.col("_rn")
-        <= F.col("_n_sh") - F.ceil(F.lit(float(threshold)) * F.col("_n_sh")) + 1
-    ).localCheckpoint()
-    pa = prefix.filter(F.col("_side") == "b").select(
-        F.col(id_col).alias("batch_id"),
-        F.col("_n_sh").alias("_na"),
-        F.col("_rn").alias("_ra"),
-        *join_keys,
-    )
-    pb = prefix.filter(F.col("_side") == "c").select(
-        F.col(id_col).alias("corpus_id"),
-        F.col("_n_sh").alias("_nb"),
-        F.col("_rn").alias("_rb"),
-        *join_keys,
-    )
-    t_frac = float(threshold) / (1.0 + float(threshold))
-    cand = (
-        pa.join(pb, join_keys)
-        .filter(
-            F.least("_na", "_nb").cast("double")
-            >= F.lit(float(threshold)) * F.greatest("_na", "_nb").cast("double")
-        )
-        .filter(
-            (
-                1
-                + F.least(F.col("_na") - F.col("_ra"), F.col("_nb") - F.col("_rb"))
-            ).cast("double")
-            >= F.lit(t_frac) * (F.col("_na") + F.col("_nb")).cast("double")
-        )
-        .select("batch_id", "corpus_id")
-        .distinct()
-    )
-    sets = (
-        both.groupBy("_side", id_col)
-        .agg(
-            F.sort_array(F.collect_list("shingle")).alias("_arr"),
-            F.count(F.lit(1)).alias("_n_sh"),
-        )
-        .localCheckpoint()
-    )
-    sa = sets.filter(F.col("_side") == "b").select(
-        F.col(id_col).alias("batch_id"),
-        F.col("_arr").alias("_aa"),
-        F.col("_n_sh").alias("n_a"),
-    )
-    sb = sets.filter(F.col("_side") == "c").select(
-        F.col(id_col).alias("corpus_id"),
-        F.col("_arr").alias("_ab"),
-        F.col("_n_sh").alias("n_b"),
-    )
-    n_inter = F.size(F.array_intersect(F.col("_aa"), F.col("_ab")))
-    return (
-        cand.join(sa, "batch_id")
-        .join(sb, "corpus_id")
-        .select(
-            "batch_id",
-            "corpus_id",
-            (
-                n_inter.cast("double")
-                / (F.col("n_a") + F.col("n_b") - n_inter).cast("double")
-            ).alias("jaccard"),
-        )
-        .filter(F.col("jaccard") >= threshold)
+    packed = _WidthTables(
+        docs, ["_side", id_col], text_col, n, block_col, max_df_frac,
+        min_df_keep, probe=False,
+    ).packed()
+    return _token_pairs(
+        packed.where("_side = 0"), packed.where("_side = 1"), id_col,
+        threshold, _CROSS, prefix_filter,
     )
 
 
@@ -1365,78 +1144,6 @@ def shingle_pair_mass(dfs: DataFrame, df_col: str = "_df") -> int:
     return int(row or 0) // 2
 
 
-class _WidthTables:
-    """Per-width router probe state that doubles as the chosen tier's
-    input (r12 optimization): ``sh0`` (uncapped shingle table, ckpt'd)
-    and ``dfs_full`` (UNcapped per-shingle df counts, ckpt'd — small,
-    vocabulary-sized) are the only materializations; everything else
-    is derived lazily:
-
-    - ``mass``: pair mass of the capped universe, from ``dfs_full``
-      filtered to ``_df <= cap`` — exact because
-      :func:`cap_shingle_df` drops whole shingle GROUPS, so surviving
-      groups keep their uncapped counts (asserted in
-      tests/test_autotier.py::test_probe_matches_materialized_stats);
-    - ``ranked()``: the capped (id[, block], shingle, _df) relation the
-      exact tiers take via ``ranked_shingles`` — sh0 anti-joined
-      against the broadcastable hot list, joined with the capped dfs.
-      Consumed exactly once downstream (the packed aggregation, itself
-      ckpt'd), so it needs no checkpoint of its own.
-
-    vs the old `_capped_df_stats` (3 eager checkpoints incl. the big
-    CAPPED shingle table + a separate hot-agg pass + a separate mass
-    aggregation): one fewer full-table materialization per width, the
-    mass scalar rides the small dfs table, and a REJECTED width wastes
-    only sh0 + dfs_full (guide §1.2/§2.4)."""
-
-    def __init__(self, df, id_col, text_col, n, block_col,
-                 max_df_frac, min_df_keep, n_docs=None):
-        self.join_keys = ["shingle"] + ([block_col] if block_col else [])
-        self.n_docs = df.count() if n_docs is None else n_docs
-        self.cap = max(max_df_frac * self.n_docs, float(min_df_keep))
-        self.sh0 = _shingle_table(
-            df, id_col, text_col, n, block_col
-        ).localCheckpoint()
-        self.dfs_full = (
-            self.sh0.groupBy(*self.join_keys)
-            .agg(F.count(F.lit(1)).alias("_df"))
-            .localCheckpoint()
-        )
-
-    @property
-    def mass(self) -> int:
-        return shingle_pair_mass(
-            self.dfs_full.filter(F.col("_df") <= self.cap)
-        )
-
-    def ranked(self) -> DataFrame:
-        hot = (
-            self.dfs_full.filter(F.col("_df") > self.cap)
-            .select(*self.join_keys)
-        )
-        # bcast: O(cap) — the hot-shingle list is bounded by contract
-        return (
-            self.sh0.join(F.broadcast(hot), self.join_keys, "left_anti")
-            .join(
-                self.dfs_full.filter(F.col("_df") <= self.cap),
-                self.join_keys,
-            )
-        )
-
-    def capped(self) -> DataFrame:
-        """The capped shingle table WITHOUT the df attach (the MinHash
-        tier's input shape), checkpointed — its consumers (signatures,
-        sizes, both verify sides) branch 4 ways."""
-        hot = (
-            self.dfs_full.filter(F.col("_df") > self.cap)
-            .select(*self.join_keys)
-        )
-        # bcast: O(cap) — hot list bounded by contract
-        return self.sh0.join(
-            F.broadcast(hot), self.join_keys, "left_anti"
-        ).localCheckpoint()
-
-
 def _capped_df_stats(
     df: DataFrame,
     id_col: str,
@@ -1515,12 +1222,13 @@ def auto_near_dup_pairs(
     tier when it is chosen (the capped/df tables are passed through).
     """
     budget = int(mass_budget_per_doc)
-    # fused probe/stats (r12, :class:`_WidthTables`): each probed width
-    # materializes only sh0 + the small df relation; the mass scalar is
-    # a tiny agg on the latter, the chosen exact tier consumes the SAME
-    # tables via ranked_shingles, and the LSH tier reuses the base
-    # width's capped table — no width materializes anything its branch
-    # does not use (guide §1.2: don't compute things you throw away)
+    # fused probe/stats (:class:`_WidthTables`): each probed width
+    # materializes only its shingle table + the small df relation; the
+    # mass scalar is a tiny agg on the latter, the chosen exact tier
+    # ranks the SAME shingle table via ranked_shingles, and the LSH tier
+    # reuses the base width's capped table — no width materializes
+    # anything its branch does not use (guide §1.2: don't compute
+    # things you throw away)
     base = _WidthTables(
         df, id_col, text_col, n, block_col, max_df_frac, min_df_keep
     )
@@ -1529,7 +1237,7 @@ def auto_near_dup_pairs(
             df, id_col, text_col, n=n, threshold=threshold,
             block_col=block_col, max_df_frac=max_df_frac,
             min_df_keep=min_df_keep,
-            ranked_shingles=base.ranked(),
+            ranked_shingles=base.packed(),
         )
         tier = f"exact_n{n}"
     else:
@@ -1543,7 +1251,7 @@ def auto_near_dup_pairs(
                 df, id_col, text_col, n=n_w, threshold=threshold,
                 block_col=block_col, max_df_frac=max_df_frac,
                 min_df_keep=min_df_keep,
-                ranked_shingles=wide.ranked(),
+                ranked_shingles=wide.packed(),
             )
             tier = f"exact_n{n_w}"
         else:
@@ -1594,7 +1302,7 @@ def auto_containment_pairs(
     for step in range(max_widenings + 1):
         tables = _WidthTables(
             df, id_col, text_col, n_cur, block_col, max_df_frac,
-            min_df_keep, n_docs=n_docs,
+            min_df_keep, n_docs=n_docs, probe=step < max_widenings,
         )
         n_docs = tables.n_docs
         # short-circuit: the final width runs unconditionally, no probe
@@ -1605,6 +1313,6 @@ def auto_containment_pairs(
         df, id_col, text_col, n=n_cur, threshold=threshold,
         block_col=block_col, max_df_frac=max_df_frac,
         min_df_keep=min_df_keep,
-        ranked_shingles=tables.ranked(),
+        ranked_shingles=tables.packed(),
     )
     return out.select(*out.columns, F.lit(f"exact_n{n_cur}").alias("tier"))

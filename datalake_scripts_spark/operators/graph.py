@@ -1,8 +1,7 @@
 """Iterative graph algorithms over edge-list DataFrames.
 
 The engine already has connected components for dedup clustering
-(``dedup.duplicate_clusters``, pointer-jump label propagation, and
-``dedup.duplicate_clusters_star``, large-star/small-star). This
+(``dedup.duplicate_clusters_star``, large-star/small-star). This
 module adds **PageRank** — the other canonical iterative graph
 computation a training-data pipeline needs (web-graph-style quality
 priors for corpus weighting; see PAPERS.md on quality scoring).
@@ -205,7 +204,7 @@ def bfs_hops(
     list on the source key) plus an anti-join against the visited set,
     so round h touches only the h-th frontier, never the whole graph.
     Each round's frontier is localCheckpoint()-ed (same contract as
-    dedup.duplicate_clusters: constant-size plans, no Catalyst
+    dedup.duplicate_clusters_star: constant-size plans, no Catalyst
     re-analysis of the join history); visited stays a lazy union of
     those checkpointed frontiers — its leaves are materialized, so
     nothing recomputes, and the whole visited set is never re-written

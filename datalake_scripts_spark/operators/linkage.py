@@ -240,6 +240,7 @@ def block_salt_width(
     b: DataFrame,
     block_col: str,
     max_pairs: int = 2_000_000,
+    symmetric: bool = False,
 ) -> int:
     """Salt width W bounding the blocked candidate-pair mass (VERDICT
     r11 ask #3 — the in-block pair space is quadratic in block size,
@@ -259,14 +260,14 @@ def block_salt_width(
     shift deterministically with the smaller candidate set, identically
     in both engines). At max_pairs defaults, sf<=0.01 masses return
     W=1 — the pair set, EM trajectory, and driver ledger are unchanged
-    below the cap."""
-    if b is a:
-        # self-probe fast path (r13, guide §1.2): when the caller knows
-        # side B carries the SAME (key, block) rows as side A — the
-        # linkage fixture's B is a value-perturbing projection of A —
-        # per-block counts are equal by construction, so the cross-pair
-        # mass is sum(ca^2) from ONE side's scan. The B side's derived
-        # columns (md5 coins) are never computed for the probe.
+    below the cap.
+
+    ``symmetric=True`` is the caller's statement that B has the same
+    per-block row counts as A (the linkage fixture's B is a
+    value-perturbing projection of A): the mass is then sum(ca^2) from
+    A's scan alone, and B's derived columns (md5 coins) are never
+    computed for the probe."""
+    if symmetric:
         ca = a.groupBy(block_col).agg(F.count(F.lit(1)).alias("ca"))
         row = ca.select(
             F.sum(F.col("ca") * F.col("ca")).alias("mass")

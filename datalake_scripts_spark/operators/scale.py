@@ -22,17 +22,17 @@ def bytes_partitions(
     target_bytes: int = 32 * 1024 * 1024,
     min_parts: int = 1,
 ) -> int:
-    """Bytes-derived partition count for a batch repartition — the
-    batch analog of ``streaming.windows.state_partitions_for`` (r13,
-    VERDICT r12 ask #4; guide §2.2 "fewer, larger partitions").
-
-    ``ceil(total_bytes / target_bytes)`` clamped to
-    ``[min_parts, spark.sql.shuffle.partitions]`` — never raises the
-    count above what the session (the deployment) already chose, so it
-    stays scale-adaptive: a 100 TB source saturates the session
-    setting, a megabyte test fixture stops fanning one value_counts
-    pass across 32 near-empty Python tasks. ``paths`` are files or
-    directories (walked)."""
+    """Bytes-derived partition count: ``ceil(total_bytes /
+    target_bytes)``, raised to ``min_parts``, then capped by
+    ``spark.sql.shuffle.partitions`` — ``min(session, max(min_parts,
+    need))``. The session setting (the deployment's choice) is the
+    hard ceiling, even below ``min_parts``, so the count stays
+    scale-adaptive: a 100 TB source saturates the session setting, a
+    megabyte test fixture stops fanning one value_counts pass across
+    32 near-empty Python tasks (guide §2.2 "fewer, larger
+    partitions"). The one sizing rule for batch repartitions and
+    streaming state (``streaming.windows.state_partitions_for``).
+    ``paths`` are files or directories (walked)."""
     total = 0
     for p in paths:
         if _os.path.isdir(p):
@@ -48,7 +48,7 @@ def bytes_partitions(
             except OSError:
                 pass
     cur = int(spark.conf.get("spark.sql.shuffle.partitions"))
-    return max(min_parts, min(cur, -(-total // target_bytes)))
+    return min(cur, max(min_parts, -(-total // target_bytes)))
 
 
 def salted_group_sum(

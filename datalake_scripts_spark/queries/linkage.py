@@ -128,12 +128,11 @@ def _linkage_patterns(spark: SparkSession, sf_dir: str) -> DataFrame:
     # size-picks the join strategy (no forced broadcast — side B scales
     # with SF); the downstream aggregation is map-side combinable to
     # <= 2^K rows, so block skew never shuffles.
-    # self-probe: B is a value-perturbing projection of A (same key
-    # and nat per row), so per-nation counts are equal by construction
-    # and the probe never computes B's md5 coins (block_salt_width
-    # fast path; mass and W identical to the two-sided probe the
-    # oracle states)
-    w = block_salt_width(a, a, "nat", max_pairs=_LINK_MAX_PAIRS)
+    # symmetric probe: B is a value-perturbing projection of A (same
+    # key and nat per row), so per-nation counts are equal by
+    # construction and the probe never computes B's md5 coins (mass
+    # and W identical to the two-sided probe the oracle states)
+    w = block_salt_width(a, b, "nat", max_pairs=_LINK_MAX_PAIRS, symmetric=True)
     al = a.withColumn("salt", F.col("key") % F.lit(w)).alias("a")
     bl = b.withColumn("salt", F.col("key") % F.lit(w)).alias("b")
     pairs = al.join(bl, ["nat", "salt"]).select(
@@ -252,12 +251,11 @@ def linkage_fs_matched_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
             + F.when(_nibble(3) < 4, F.lit(1)).otherwise(F.lit(0))
         ).alias("bucket"),
     )
-    # self-probe: B is a value-perturbing projection of A (same key
-    # and nat per row), so per-nation counts are equal by construction
-    # and the probe never computes B's md5 coins (block_salt_width
-    # fast path; mass and W identical to the two-sided probe the
-    # oracle states)
-    w = block_salt_width(a, a, "nat", max_pairs=_LINK_MAX_PAIRS)
+    # symmetric probe: B is a value-perturbing projection of A (same
+    # key and nat per row), so per-nation counts are equal by
+    # construction and the probe never computes B's md5 coins (mass
+    # and W identical to the two-sided probe the oracle states)
+    w = block_salt_width(a, b, "nat", max_pairs=_LINK_MAX_PAIRS, symmetric=True)
     al = a.withColumn("salt", F.col("key") % F.lit(w)).alias("a")
     bl = b.withColumn("salt", F.col("key") % F.lit(w)).alias("b")
     pairs = al.join(bl, ["nat", "salt"]).select(

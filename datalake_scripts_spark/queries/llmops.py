@@ -1144,18 +1144,18 @@ def text_top_bigrams_per_lang(spark: SparkSession, sf_dir: str) -> DataFrame:
 @query("dedup_duplicate_clusters", sql=_SQL_CLUSTERS)
 def dedup_duplicate_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Connected components over the near-duplicate pair graph
-    (operators.dedup.duplicate_clusters): iterative min-label
-    propagation to a fixpoint — the step after pairwise dedup that
-    yields keep-one-per-CLUSTER semantics (pairs alone can't: a~b, b~c
-    must collapse a,b,c together). Iterative on the Spark side, yet
-    fully hash-checked: the oracle states the same fixpoint as a
+    (operators.dedup.duplicate_clusters_star, the one CC
+    implementation) — the step after pairwise dedup that yields
+    keep-one-per-CLUSTER semantics (pairs alone can't: a~b, b~c must
+    collapse a,b,c together). Iterative on the Spark side, yet fully
+    hash-checked: the oracle states the same fixpoint as a
     recursive-CTE transitive closure (exact on the sf0.01 graph)."""
-    from ..operators.dedup import duplicate_clusters, ngram_jaccard_pairs
+    from ..operators.dedup import duplicate_clusters_star, ngram_jaccard_pairs
 
     docs = t(spark, sf_dir, "documents")
     pairs = ngram_jaccard_pairs(docs, "doc_id", "text", n=2, threshold=0.5,
                                 block_col="lang")
-    return duplicate_clusters(pairs)
+    return duplicate_clusters_star(pairs)
 
 
 @query(
@@ -1257,10 +1257,10 @@ def dedup_duplicate_clusters_star(spark: SparkSession, sf_dir: str) -> DataFrame
     alternating large-star/small-star contraction
     (operators.dedup.duplicate_clusters_star) — the at-scale CC: the
     per-round state is the contracting edge set itself, O(log n) rounds,
-    no label table re-joined against a static edge relation. Produces
-    clusters identical to dedup_duplicate_clusters (equivalence tested);
-    registered separately so both algorithms stay driver-checked against
-    the same recursive-CTE closure oracle."""
+    no label table re-joined against a static edge relation. Since the
+    label-propagation CC was retired, dedup_duplicate_clusters runs the
+    same operator; both names stay registered against the same
+    recursive-CTE closure oracle."""
     from ..operators.dedup import duplicate_clusters_star, ngram_jaccard_pairs
 
     docs = t(spark, sf_dir, "documents")
@@ -2875,8 +2875,8 @@ def entity_resolution_canonical(spark: SparkSession, sf_dir: str) -> DataFrame:
     bounded by real-world entity-name cardinality, not corpus size.
 
     Pipeline shape: one groupBy(name) (map-side combined), a trivial
-    blocked self-join + banded DP on the name relation, pointer-jump CC
-    (dedup.duplicate_clusters, O(log diameter) rounds) on the tiny
+    blocked self-join + banded DP on the name relation, star CC
+    (dedup.duplicate_clusters_star, O(log n) rounds) on the tiny
     graph, then ONE key-partitioned join to expand labels over records.
     The DuckDB oracle walks the uncontracted record-level edges with a
     recursive CTE — transitive-closure semantics, identical clusters
@@ -2902,7 +2902,7 @@ def entity_resolution_canonical(spark: SparkSession, sf_dir: str) -> DataFrame:
         .filter(F.levenshtein("name_a", "name_b", 4) >= 0)
         .select("id_a", "id_b")
     )
-    cc = D.duplicate_clusters(name_pairs)  # (doc_id=gid, cluster_id)
+    cc = D.duplicate_clusters_star(name_pairs)  # (doc_id=gid, cluster_id)
     # a name group is an entity cluster even with no cross-name match
     # when it holds >= 2 records (its members are lev-0 pairs)
     labeled = (

@@ -421,13 +421,10 @@ def sketch_mg_heavy_hitters_exact(spark: SparkSession, sf_dir: str) -> DataFrame
     # near-empty Python tasks, making the query run FASTER on 8 cores
     # than 32 (r13 baseline ratio 0.70; VERDICT r12 ask #4). The MG
     # candidate SET varies with partitioning, the RESULT never does.
-    import os as _os
-
+    from ..io import table_path
     from ..operators.scale import bytes_partitions
 
-    n = bytes_partitions(
-        spark, _os.path.join(sf_dir, "documents.parquet")
-    )
+    n = bytes_partitions(spark, table_path(sf_dir, "documents"))
     if n > 1:
         docs = docs.repartition(n)
     items = docs.select(F.explode(X.tokens("text")).alias("item"))

@@ -15,7 +15,6 @@ Structured Streaming's incrementalization, not a parallel codebase.
 from __future__ import annotations
 
 import contextlib as _contextlib
-import os
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -60,10 +59,10 @@ def state_partitions_for(
     sf0.1, the rolling-distinct stream spent 1.3 s per micro-batch on
     64 near-empty stores (2 stateful ops x 32 partitions) — the EMPTY
     watermark-flush batch alone took 1.3 s. Sizing by the source's
-    bytes (ceil(bytes / target), clamped to [min_parts, session
-    setting]) keeps per-store state near ``target_bytes`` and never
-    RAISES the count above what the session (i.e. the deployment)
-    already chose, so a production session with thousands of shuffle
+    bytes (:func:`operators.scale.bytes_partitions`: ceil(bytes /
+    target) raised to ``min_parts``, capped by the session setting)
+    keeps per-store state near ``target_bytes`` and never RAISES the
+    count above what the session (i.e. the deployment) already chose, so a production session with thousands of shuffle
     partitions and a large source keeps them. Results are unchanged —
     partitioning only moves rows across stores.
 
@@ -82,18 +81,13 @@ def state_partitions_for(
 
     Restores the session setting on exit; the streaming query keeps
     the pinned count for its lifetime (Spark reads it at start)."""
-    total = 0
-    for root, _dirs, files in os.walk(src):
-        for f in files:
-            try:
-                total += os.path.getsize(os.path.join(root, f))
-            except OSError:
-                pass
+    from ..operators.scale import bytes_partitions
+
     cur = int(spark.conf.get("spark.sql.shuffle.partitions"))
     floor = min_parts
     if floor_parallelism:
         floor = max(floor, spark.sparkContext.defaultParallelism)
-    n = max(min(cur, floor), min(cur, -(-total // target_bytes)))
+    n = bytes_partitions(spark, src, target_bytes=target_bytes, min_parts=floor)
     spark.conf.set("spark.sql.shuffle.partitions", str(n))
     try:
         yield n

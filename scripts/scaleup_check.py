@@ -257,7 +257,7 @@ def _entity_resolution_scaled(spark, sf_dir):
         .filter(F.levenshtein("name_a", "name_b", 4) >= 0)
         .select("id_a", "id_b")
     )
-    cc = D.duplicate_clusters(name_pairs)
+    cc = D.duplicate_clusters_star(name_pairs)
     labeled = (
         nm.join(cc.withColumnRenamed("doc_id", "gid"), "gid", "left")
         .filter(F.col("cluster_id").isNotNull() | (F.col("group_n") >= 2))

@@ -138,53 +138,6 @@ def test_hot_shingle_df_cap_drops_stopword_shingle(spark):
     assert pairs.count() == 0
 
 
-def _clusters_of(rows):
-    """Canonical form: frozenset of member-frozensets."""
-    from collections import defaultdict
-
-    by_label = defaultdict(set)
-    for r in rows:
-        by_label[r.cluster_id].add(r.doc_id)
-    return frozenset(frozenset(v) for v in by_label.values())
-
-
-@pytest.mark.parametrize(
-    "pairs",
-    [
-        # chain: one component spanning 12 nodes
-        [(i, i + 1) for i in range(1, 12)],
-        # two cliques + an isolated pair
-        [(a, b) for a in range(1, 5) for b in range(a + 1, 5)]
-        + [(a, b) for a in range(10, 14) for b in range(a + 1, 14)]
-        + [(100, 101)],
-        # star + bridge
-        [(1, k) for k in range(2, 8)] + [(7, 20), (20, 21)],
-    ],
-)
-def test_star_cc_equals_label_propagation(spark, pairs):
-    df = spark.createDataFrame(
-        [Row(id_a=a, id_b=b, score=1.0) for a, b in pairs]
-    )
-    lp = D.duplicate_clusters(df).collect()
-    star = D.duplicate_clusters_star(df).collect()
-    assert _clusters_of(star) == _clusters_of(lp)
-    # both label every node with its component MINIMUM id
-    assert all(r.cluster_id == min(c)
-               for c in _clusters_of(star) for r in star if r.doc_id in c)
-
-
-def test_star_cc_random_graph_matches(spark):
-    import random
-
-    rng = random.Random(7)
-    pairs = [(rng.randint(1, 60), rng.randint(1, 60)) for _ in range(80)]
-    pairs = [(a, b) for a, b in pairs if a != b]
-    df = spark.createDataFrame([Row(id_a=a, id_b=b) for a, b in pairs])
-    assert _clusters_of(D.duplicate_clusters_star(df).collect()) == _clusters_of(
-        D.duplicate_clusters(df, max_iters=30).collect()
-    )
-
-
 def _union_find(pairs):
     """Reference components: {node: component minimum}; self-loops add
     no node (the operator drops them too)."""
@@ -226,7 +179,16 @@ def _random_graph(seed, nodes, edges):
         [(1, 3), (2, 5), (3, 4), (4, 5)],
     ]
     + [_random_graph(seed, n, m) for seed, (n, m) in
-       enumerate([(10, 20), (30, 25), (60, 80), (200, 150), (400, 600)])],
+       enumerate([(10, 20), (30, 25), (60, 80), (200, 150), (400, 600)])]
+    + [
+        [(i, i + 1) for i in range(1, 12)],  # 12-node chain
+        # two cliques + an isolated pair
+        [(a, b) for a in range(1, 5) for b in range(a + 1, 5)]
+        + [(a, b) for a in range(10, 14) for b in range(a + 1, 14)]
+        + [(100, 101)],
+        [(1, k) for k in range(2, 8)] + [(7, 20), (20, 21)],  # star + bridge
+        _random_graph(7, 60, 80),
+    ],
 )
 def test_star_cc_matches_union_find(spark, pairs):
     df = spark.createDataFrame(pairs, "id_a long, id_b long")
@@ -276,16 +238,15 @@ def test_prefix_filter_lossless(spark, sf_dir):
 
 
 def test_cc_nonconvergence_raises_not_silent(spark):
-    """Both CC variants must refuse to return partial labels: an
-    iteration budget too small for the graph raises instead of silently
-    splitting one duplicate cluster across ids."""
+    """CC must refuse to return partial labels: an iteration budget too
+    small for the graph raises instead of silently splitting one
+    duplicate cluster across ids — under both exported names."""
     chain = spark.createDataFrame(
         [Row(id_a=i, id_b=i + 1) for i in range(1, 40)]
     )
+    assert D.duplicate_clusters is D.duplicate_clusters_star
     with pytest.raises(RuntimeError, match="did not converge"):
-        D.duplicate_clusters(chain, max_iters=2)
-    with pytest.raises(RuntimeError, match="did not converge"):
-        D.duplicate_clusters_star(chain, max_iters=1)
+        D.duplicate_clusters(chain, max_iters=1)
 
 
 def _emb(spark, sf_dir):
@@ -524,3 +485,153 @@ def test_shared_rank_table_outputs_identical(spark, sf_dir):
         solo = op(docs, "doc_id", "text", n=3, **kw)
         shared = op(docs, "doc_id", "text", n=3, ranked_shingles=ranked, **kw)
         assert sorted(solo.collect()) == sorted(shared.collect())
+
+
+# --------------------------------------------------------------------------
+# The integer-token shingle-join core (_WidthTables + _token_pairs)
+# --------------------------------------------------------------------------
+
+def _core_corpus(seed, n_docs=70):
+    """(doc_id, text, lang): a two-language corpus with docs shorter
+    than a bigram (empty, one token), exact copies, edited copies, and
+    a "hot pair" bigram in most English docs for the df cap to drop."""
+    import random
+
+    r = random.Random(seed)
+    vocab = [f"w{i}" for i in range(25)]
+    rows = []
+    for i in range(n_docs):
+        u = r.random()
+        if u < 0.1 and rows:
+            rows.append((i,) + r.choice(rows)[1:])
+            continue
+        if u < 0.3 and rows:
+            _, text, lang = r.choice(rows)
+            toks = [r.choice(vocab) if r.random() < 0.15 else w for w in text.split()]
+            rows.append((i, " ".join(toks), lang))
+            continue
+        lang = "en" if r.random() < 0.7 else "de"
+        toks = [r.choice(vocab) for _ in range(r.choice([0, 1, 2, r.randint(3, 25)]))]
+        if lang == "en" and r.random() < 0.8:
+            toks += ["hot", "pair"]
+        rows.append((i, " ".join(toks), lang))
+    return rows
+
+
+def _py_pairs(left, right, kind, n, t, block, max_df_frac, min_df_keep):
+    """Exhaustive reference over (id, text, lang) rows: capped shingle
+    sets, then every pair sharing a shingle, scored in Python."""
+    docs = [("l", d) for d in left] + ([("r", d) for d in right] if right else [])
+    sets = {}
+    for side, (i, text, lang) in docs:
+        toks = text.lower().split()
+        blk = lang if block else None
+        sets[side, i] = (blk, {" ".join(toks[k:k + n]) for k in range(len(toks) - n + 1)})
+    df = {}
+    for blk, sh in sets.values():
+        for s in sh:
+            df[s, blk] = df.get((s, blk), 0) + 1
+    cap = max(max_df_frac * len(docs), float(min_df_keep))
+    capped = {k: (blk, {s for s in sh if df[s, blk] <= cap}) for k, (blk, sh) in sets.items()}
+    lefts = [k for k in capped if k[0] == "l"]
+    rights = [k for k in capped if k[0] == ("r" if right else "l")]
+    out = set()
+    for a in lefts:
+        for b in rights:
+            (ba, sa), (bb, sb) = capped[a], capped[b]
+            inter = len(sa & sb)
+            if ba != bb or inter == 0:
+                continue
+            if kind == "containment":
+                if a != b and inter / float(len(sa)) >= t:
+                    out.add((a[1], b[1], inter / float(len(sa)), len(sa), len(sb)))
+            elif (kind == "cross" or a[1] < b[1]):
+                j = inter / float(len(sa) + len(sb) - inter)
+                if j >= t:
+                    out.add((a[1], b[1], j))
+    return out
+
+
+def _run_core(spark, kind, rows, cross_rows, **kw):
+    schema = "doc_id long, text string, lang string"
+    df = spark.createDataFrame(rows, schema)
+    if kind == "jaccard":
+        out = D.ngram_jaccard_pairs(df, "doc_id", "text", **kw)
+    elif kind == "containment":
+        out = D.containment_pairs(df, "doc_id", "text", **kw)
+    else:
+        out = D.ngram_jaccard_pairs_cross(
+            df, spark.createDataFrame(cross_rows, schema), "doc_id", "text", **kw
+        )
+    return {tuple(r) for r in out.collect()}
+
+
+@pytest.mark.parametrize("block", [None, "lang"])
+@pytest.mark.parametrize("kind,t", [("jaccard", 0.5), ("containment", 0.7), ("cross", 0.4)])
+def test_token_core_equals_exhaustive_and_python(spark, kind, t, block):
+    """Prefix + length + positional filters on integer tokens return
+    exactly the exhaustive join's rows (prefix_filter=False) and an
+    independent Python recomputation — on corpora with blocks, a capped
+    hot bigram, docs shorter than n, exact copies, and (cross) ids that
+    appear on both sides."""
+    for seed in (1, 2):
+        rows = _core_corpus(seed)
+        left, right = rows, None
+        if kind == "cross":
+            # batch: every third doc; corpus: the rest, plus some batch
+            # docs again under the SAME id
+            left = [x for x in rows if x[0] % 3 == 0]
+            right = [x for x in rows if x[0] % 3 != 0 or x[0] % 9 == 0]
+        kw = dict(n=2, threshold=t, block_col=block, max_df_frac=0.5, min_df_keep=3)
+        fast = _run_core(spark, kind, left, right, **kw)
+        slow = _run_core(spark, kind, left, right, prefix_filter=False, **kw)
+        want = _py_pairs(left, right, kind, 2, t, block, 0.5, 3)
+        assert fast == slow == want
+        assert len(want) > 5
+        if kind == "cross":
+            assert any(a == b for a, b, _ in want)  # same id, both sides
+
+
+def test_token_core_independent_of_token_ids(spark):
+    """Tokens come from monotonically_increasing_id, so they change with
+    the input's partitioning; the pairs and scores must not."""
+    rows = _core_corpus(3, n_docs=90)
+    df = spark.createDataFrame(rows, "doc_id long, text string, lang string")
+    one, many = df.coalesce(1), df.repartition(7, "text")
+
+    def toks(x):
+        wt = D._WidthTables(x, "doc_id", "text", 2, "lang", 0.5, 3)
+        return {(r.shingle, r.lang): r._tok for r in wt.ranked().collect()}
+
+    assert toks(one) != toks(many)  # the two runs really number differently
+    for op, kw in (
+        (D.ngram_jaccard_pairs, {"threshold": 0.5}),
+        (D.containment_pairs, {"threshold": 0.7}),
+    ):
+        got = [
+            sorted(op(x, "doc_id", "text", n=2, block_col="lang", min_df_keep=3,
+                      **kw).collect())
+            for x in (one, many)
+        ]
+        assert got[0] == got[1] and got[0]
+
+
+def test_jaccard_pairs_job_count(spark):
+    """The token core runs ngram_jaccard_pairs on a small blocked corpus
+    in at most 11 Spark jobs (the string pipeline it replaced ran 17
+    here): the doc count, the one df pass, and the candidate-verify
+    query that packs, joins and verifies."""
+    rows = _core_corpus(4, n_docs=80)
+    df = spark.createDataFrame(rows, "doc_id long, text string, lang string")
+    df = df.localCheckpoint()
+    sc = spark.sparkContext
+    sc.setJobGroup("test_jaccard_pairs_job_count", "ngram_jaccard_pairs")
+    try:
+        D.ngram_jaccard_pairs(
+            df, "doc_id", "text", n=2, threshold=0.5, block_col="lang"
+        ).localCheckpoint()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    jobs = sc.statusTracker().getJobIdsForGroup("test_jaccard_pairs_job_count")
+    assert len(jobs) <= 11, len(jobs)

@@ -94,9 +94,10 @@ def test_candidate_summaries_are_bounded_and_superset(spark):
 
 
 def test_bytes_partitions_clamps(spark, tmp_path):
-    """bytes_partitions (r13): ceil(bytes/target) clamped to
-    [min_parts, session shuffle setting] — the state_partitions_for
-    discipline for batch repartitions."""
+    """bytes_partitions: min(session setting, max(min_parts,
+    ceil(bytes/target))) — the one sizing rule it shares with
+    streaming.state_partitions_for; the session setting caps even
+    min_parts."""
     from datalake_scripts_spark.operators.scale import bytes_partitions
 
     f = tmp_path / "blob.bin"
@@ -108,8 +109,12 @@ def test_bytes_partitions_clamps(spark, tmp_path):
     ) == min(cur, 3)
     # tiny source floors at min_parts
     assert bytes_partitions(spark, str(f)) == 1
-    assert bytes_partitions(spark, str(f), min_parts=2) == max(
-        2, min(cur, 1)
-    )
+    assert bytes_partitions(spark, str(f), min_parts=2) == min(cur, 2)
     # huge derivation is capped by the session setting (walks dirs too)
     assert bytes_partitions(spark, str(tmp_path), target_bytes=1) == cur
+    # a session setting below min_parts wins
+    spark.conf.set("spark.sql.shuffle.partitions", "2")
+    try:
+        assert bytes_partitions(spark, str(f), min_parts=4) == 2
+    finally:
+        spark.conf.set("spark.sql.shuffle.partitions", str(cur))

@@ -117,3 +117,26 @@ def test_matched_pairs_are_exactly_true_twins(spark):
     assert len(rows) > 0
     assert all(r.key_a == r.key_b for r in rows)  # precision 1.0
     assert all(r.match_prob >= 0.9 for r in rows)
+
+
+def test_symmetric_salt_probe_equals_two_sided(spark):
+    """block_salt_width(symmetric=True) scans A alone; on a B with the
+    same per-block counts (a value-perturbing projection of A, as in
+    the linkage queries) it must give the two-sided mass. max_pairs=1
+    makes W the mass itself."""
+    from pyspark.sql import functions as F
+
+    from datalake_scripts_spark.operators.linkage import block_salt_width
+
+    a = spark.createDataFrame(
+        [(k, k % 7 if k % 5 else 0) for k in range(1, 120)], "key long, nat int"
+    )
+    b = a.select("key", "nat", F.md5(F.col("key").cast("string")).alias("coin"))
+    counts = {r.nat: r["count"] for r in a.groupBy("nat").count().collect()}
+    assert counts == {r.nat: r["count"] for r in b.groupBy("nat").count().collect()}
+    mass = sum(c * c for c in counts.values())
+    two_sided = block_salt_width(a, b, "nat", max_pairs=1)
+    assert two_sided == mass
+    assert block_salt_width(a, b, "nat", max_pairs=1, symmetric=True) == mass
+    # an object-identical B takes the two-sided path unless told otherwise
+    assert block_salt_width(a, a, "nat", max_pairs=1) == mass

@@ -386,10 +386,10 @@ def test_stream_stream_interval_join_equals_batch(spark, events_dir):
 
 
 def test_state_partitions_for_policies(spark, events_dir):
-    """Sizing contract of state_partitions_for (r13): bytes-derived,
-    clamped to the session setting, optional defaultParallelism floor
-    for Python-stateful operators — and the session value is restored
-    on exit."""
+    """Sizing contract of state_partitions_for: the bytes_partitions
+    rule min(session setting, max(min_parts, ceil(bytes/target))), an
+    optional defaultParallelism floor for Python-stateful operators —
+    and the session value is restored on exit."""
     from datalake_scripts_spark.streaming import state_partitions_for
 
     cur = int(spark.conf.get("spark.sql.shuffle.partitions"))
@@ -398,7 +398,7 @@ def test_state_partitions_for_policies(spark, events_dir):
     # tiny source, default policy: bytes-derived floor of 4 (per-store
     # commit overhead dominates JVM-stateful streams)
     with state_partitions_for(spark, events_dir) as n:
-        want = max(4, min(cur, -(-_dir_bytes(events_dir) // (32 << 20))))
+        want = min(cur, max(4, -(-_dir_bytes(events_dir) // (32 << 20))))
         assert n == want
         assert int(spark.conf.get("spark.sql.shuffle.partitions")) == n
     assert int(spark.conf.get("spark.sql.shuffle.partitions")) == cur
@@ -414,6 +414,15 @@ def test_state_partitions_for_policies(spark, events_dir):
     # a huge-bytes source derivation is still capped by the session
     with state_partitions_for(spark, events_dir, target_bytes=1) as n:
         assert n == cur
+
+    # a session setting below min_parts wins, and is restored
+    spark.conf.set("spark.sql.shuffle.partitions", "2")
+    try:
+        with state_partitions_for(spark, events_dir, min_parts=4) as n:
+            assert n == 2
+        assert spark.conf.get("spark.sql.shuffle.partitions") == "2"
+    finally:
+        spark.conf.set("spark.sql.shuffle.partitions", str(cur))
 
 
 def _dir_bytes(path):
