@@ -101,16 +101,16 @@ def test_dml_conflict_raises_not_lost(spark, sf_dir, table_dir, monkeypatch):
     nation = read_table(spark, sf_dir, "nation")
     write_versioned(spark, nation, table_dir, mode="append")
 
-    real_touched = V._predicate_touched_files
+    real_candidates = V._candidate_files
 
-    def touched_then_sneak_append(*args, **kwargs):
-        out = real_touched(*args, **kwargs)
+    def candidates_then_sneak_append(*args, **kwargs):
+        out = real_candidates(*args, **kwargs)
         # concurrent writer lands AFTER the delete chose its file set
-        monkeypatch.setattr(V, "_predicate_touched_files", real_touched)
+        monkeypatch.setattr(V, "_candidate_files", real_candidates)
         write_versioned(spark, nation.limit(3), table_dir, mode="append")
         return out
 
-    monkeypatch.setattr(V, "_predicate_touched_files", touched_then_sneak_append)
+    monkeypatch.setattr(V, "_candidate_files", candidates_then_sneak_append)
     files_before = set(glob.glob(f"{table_dir}/data/*"))
     with pytest.raises(CommitConflict):
         delete_versioned(spark, table_dir, "n_nationkey = 0")

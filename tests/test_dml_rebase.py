@@ -247,6 +247,76 @@ def test_dv_delete_rebases_over_disjoint_append(spark, table_dir):
     assert m.get("dvs")  # merge-on-read: DV present, files carried
 
 
+def test_dv_update_rebases_over_disjoint_append(spark, table_dir):
+    """Merge-on-read UPDATE: its DV stacks onto the winner's snapshot
+    and its appended images land beside the winner's files."""
+    V.write_versioned(spark, _tbl(spark, n=100), table_dir, mode="append")
+    base = V.current_version(table_dir)
+    extra = spark.range(1000, 1020).select(
+        F.col("id").alias("k"), F.lit("9").alias("p"),
+        (F.col("id") * 2).alias("val"),
+    )
+
+    wrapper, real = _race(
+        lambda: V.write_versioned(spark, extra, table_dir, mode="append")
+    )
+    V._commit_manifest = wrapper
+    try:
+        v, n = V.update_versioned(
+            spark, table_dir, "k < 10", {"val": "val + 1000"},
+            skip_filter=[("k", "<", 10)], deletion_vectors=True,
+        )
+    finally:
+        V._commit_manifest = real
+    assert n == 10
+    assert v == V.current_version(table_dir) == base + 2
+    got = V.read_versioned(spark, table_dir)
+    assert got.filter("k < 10 AND val >= 1000").count() == 10
+    assert got.filter("k >= 1000").count() == 20  # append preserved
+    assert got.count() == 120
+    m = V._load_manifest(table_dir, v)
+    assert m.get("dvs")
+
+
+def test_dv_merge_rebases_over_disjoint_append(spark, table_dir):
+    """Merge-on-read MERGE racing an append outside the source-key
+    envelope: the envelope guard clears the added files, the DV stacks
+    and the images plus inserts append over the winner."""
+    V.write_versioned(spark, _tbl(spark, n=100), table_dir, mode="append")
+    src = spark.range(10).select(
+        F.col("id").alias("k"), F.lit("0").alias("p"),
+        F.lit(777).cast("long").alias("val"),
+    ).union(
+        spark.range(200, 202).select(
+            F.col("id").alias("k"), F.lit("0").alias("p"),
+            F.lit(888).cast("long").alias("val"),
+        )
+    )
+    extra = spark.range(5000, 5005).select(
+        F.col("id").alias("k"), F.lit("9").alias("p"),
+        (F.col("id") * 2).alias("val"),
+    )
+
+    wrapper, real = _race(
+        lambda: V.write_versioned(spark, extra, table_dir, mode="append")
+    )
+    V._commit_manifest = wrapper
+    try:
+        v, counts = V.merge_versioned(
+            spark, table_dir, src, on=["k"],
+            when_matched_update={"val": "s.val"}, deletion_vectors=True,
+        )
+    finally:
+        V._commit_manifest = real
+    assert counts == {"n_updated": 10, "n_deleted": 0, "n_inserted": 2}
+    got = V.read_versioned(spark, table_dir)
+    assert got.filter("k < 10 AND val = 777").count() == 10
+    assert got.filter("k IN (200, 201)").count() == 2
+    assert got.filter("k >= 5000").count() == 5  # append preserved
+    assert got.count() == 107
+    assert V._load_manifest(table_dir, v).get("dvs")
+
+
 def test_optimize_where_rebases_over_disjoint_append(spark, table_dir):
     """OPTIMIZE ... WHERE is pure re-layout: winner-added files never
     affect it, so it rebases even without a stats guard."""

@@ -359,21 +359,36 @@ def test_delete_rewrites_only_touched_files(spark, sf_dir, table_dir):
 
 
 def test_delete_skip_filter_prunes_scan(spark, sf_dir, table_dir):
-    from datalake_scripts_spark.operators.versioned import (
-        _load_manifest,
-        _predicate_touched_files,
-    )
+    from datalake_scripts_spark.operators import versioned as V
 
     _nation_parts(spark, sf_dir, table_dir)
-    manifest = _load_manifest(table_dir, 3)
+    manifest = V._load_manifest(table_dir, 3)
+    skip = [("n_nationkey", "=", 5)]
     # stats prune candidate files before any scan: only the first
     # commit's file can hold key 5
-    touched = _predicate_touched_files(
-        spark, table_dir, manifest, "n_nationkey = 5", [("n_nationkey", "=", 5)]
+    candidates = V._candidate_files(
+        table_dir, manifest, V._prune_filter(skip, manifest)
     )
-    assert len(touched) == 1
-    candidates = files_for_read(table_dir, skip_filter=[("n_nationkey", "=", 5)])
     assert len(candidates) == 1
+    assert files_for_read(table_dir, skip_filter=skip) == candidates
+    # the DML pipeline scans only those candidates: the delete touches
+    # (rewrites) exactly that one file
+    seen = []
+    real = V._candidate_files
+
+    def spy(*args, **kwargs):
+        seen.append(real(*args, **kwargs))
+        return seen[-1]
+
+    V._candidate_files = spy
+    try:
+        v, n = V.delete_versioned(
+            spark, table_dir, "n_nationkey = 5", skip_filter=skip
+        )
+    finally:
+        V._candidate_files = real
+    assert seen == [candidates] and n == 1
+    assert V._load_manifest(table_dir, v)["meta"]["n_touched_files"] == 1
 
 
 def test_delete_no_match_is_noop(spark, sf_dir, table_dir):

@@ -303,6 +303,52 @@ def test_history_and_files_metadata_tables(spark, sf_dir, tmp_path):
     assert all(r["size_bytes"] > 0 and r["n_rows"] > 0 for r in f)
     # physical rows: DV'd rows still counted per file
     assert sum(r["n_rows"] for r in f) == orders.count()
+    # every DML verb × write mode records the same row and file counts
+    # in its commit meta; history_df keeps its columns
+    for dv, r in ((False, 1), (True, 2)):
+        v, n = V.delete_versioned(
+            spark, base, f"o_orderkey % 10 = {r}", deletion_vectors=dv
+        )
+        assert n > 0
+        want = {"n_deleted": n, "n_updated": 0, "n_inserted": 0}
+        meta = V._load_manifest(base, v)["meta"]
+        assert {k: meta[k] for k in want} == want
+        assert meta["n_touched_files"] >= 1
+        # a DV delete stages only its DV object, no data file
+        assert ("deletion_vector" in meta) == dv
+        if dv:
+            assert meta["n_added_files"] == 0
+        v, n = V.update_versioned(
+            spark, base, f"o_orderkey % 10 = {r + 2}",
+            {"o_orderpriority": "'U'"}, deletion_vectors=dv,
+        )
+        assert n > 0
+        want = {"n_deleted": 0, "n_updated": n, "n_inserted": 0}
+        meta = V._load_manifest(base, v)["meta"]
+        assert {k: meta[k] for k in want} == want
+        assert meta["n_touched_files"] >= 1 and meta["n_added_files"] >= 1
+        assert ("deletion_vector" in meta) == dv
+        src = V.read_versioned(spark, base).filter(
+            f"o_orderkey % 10 = {r + 4}"
+        ).unionByName(
+            orders.filter("o_orderkey < 10")
+            .withColumn("o_orderkey", F.col("o_orderkey") + 10000 * (r + 1))
+        ).withColumn("o_orderpriority", F.lit("M"))
+        v, counts = V.merge_versioned(
+            spark, base, src, on=["o_orderkey"],
+            when_matched_update={"o_orderpriority": "s.o_orderpriority"},
+            deletion_vectors=dv,
+        )
+        assert counts["n_updated"] > 0 and counts["n_inserted"] > 0
+        meta = V._load_manifest(base, v)["meta"]
+        assert {k: meta[k] for k in counts} == counts
+        assert meta["n_touched_files"] >= 1 and meta["n_added_files"] >= 1
+        assert ("deletion_vector" in meta) == dv
+    h = V.history_df(spark, base)
+    assert h.columns == [
+        "version", "mode", "n_files", "n_rows", "n_dvs", "committed_at",
+    ]
+    assert h.count() == 8
 
 
 def test_purge_rows_physical_erasure(spark, sf_dir, tmp_path):
